@@ -135,19 +135,21 @@ def run_pipeline(
     run_ts = run_ts or dt.datetime.now(dt.timezone.utc)
     products = build_products(spark, payloads, run_ts)
     products = products.cache()  # consumed twice: prices join + own sink
-    prices = build_prices(products, changes, season, run_ts)
-
     prices_path = os.path.join(out_dir, "pricenow_prices")
     products_path = os.path.join(out_dir, "pricenow_products")
-    merge_upsert_parquet(
-        spark, prices, prices_path, keys=["product_id", "valid_from"], table="pricenow_prices"
-    )  # K3
-    merge_upsert_parquet(
-        spark,
-        products.select("product_id", "category", "age", "duration", "updated_at"),
-        products_path,
-        keys=["product_id"],
-        table="pricenow_products",
-    )  # K2, T12 projection
-    products.unpersist()
+    try:
+        prices = build_prices(products, changes, season, run_ts)
+        merge_upsert_parquet(
+            spark, prices, prices_path, keys=["product_id", "valid_from"], table="pricenow_prices"
+        )  # K3
+        merge_upsert_parquet(
+            spark,
+            products.select("product_id", "category", "age", "duration", "updated_at"),
+            products_path,
+            keys=["product_id"],
+            table="pricenow_products",
+        )  # K2, T12 projection
+    finally:
+        # a guard failure in either upsert must not leak the cached dimension
+        products.unpersist()
     return {"pricenow_prices": prices_path, "pricenow_products": products_path}

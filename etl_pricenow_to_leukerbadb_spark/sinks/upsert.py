@@ -26,6 +26,14 @@ guards). Spark has no DataFrame-native upsert, so the engine provides:
                             behind an import-try since no DB driver is
                             baked into this environment.
 
+Every keyed sink (``merge_upsert_parquet``, ``merge_upsert_partitioned``,
+``jdbc_upsert``) evaluates its update set exactly once: it persists the
+input (unless the caller already cached it), runs both PK guards as one
+aggregation over the persisted rows before anything is staged or
+written, writes from the same rows, and unpersists in a ``finally``.
+Without that, an upstream plan such as the forward-fill window would be
+recomputed by every guard and again by the write.
+
 Scale notes: the anti-join inside ``merge_upsert_df`` shuffles both
 sides by the merge keys — at lakehouse scale you'd let the table
 format (Delta/Iceberg) do file-level pruning instead; the API here is
@@ -35,7 +43,10 @@ deliberately the same shape as ``MERGE INTO t USING u ON keys``.
 from __future__ import annotations
 
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -62,14 +73,60 @@ def assert_keys_not_null(df: DataFrame, keys: list[str], table: str = "<target>"
 
 
 def assert_keys_unique(df: DataFrame, keys: list[str], table: str = "<target>") -> None:
-    """Second pre-write PK guard: refuse the write if any key occurs
-    twice. Duplicate keys make an upsert batch ill-defined — Postgres
-    raises 'ON CONFLICT DO UPDATE command cannot affect row a second
-    time' when both rows land in one statement, and same-key rows in
-    different partitions would commit in arbitrary order."""
-    dup = df.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-    if dup:
+    """Both pre-write PK guards in one aggregation: refuse the write if
+    any key column holds a null (the ``assert_keys_not_null`` check) or
+    any key occurs twice. A null key wins when both hold. Duplicate
+    keys make an upsert batch ill-defined — Postgres raises 'ON
+    CONFLICT DO UPDATE command cannot affect row a second time' when
+    both rows land in one statement, and same-key rows in different
+    partitions would commit in arbitrary order.
+
+    ``groupBy(keys)`` gives each key its row count and whether it is
+    null; one global ``max`` over those flags decides, so ``df`` is
+    scanned once."""
+    null_key = F.lit(False)
+    for k in keys:
+        null_key = null_key | F.col(k).isNull()
+    has_null, has_dup = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(F.max(null_key), F.max(F.col("__n") > 1))
+        .first()
+    )
+    if has_null:
+        raise ValueError(f"upsert into {table}: null in key column(s) {keys}")
+    if has_dup:
         raise ValueError(f"upsert into {table}: duplicate rows for key(s) {keys}")
+
+
+_CACHE_COALESCE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+@contextmanager
+def _guarded_once(df: DataFrame, keys: list[str], table: str) -> Iterator[None]:
+    """Persist ``df`` for the body of the ``with`` and run the PK guard
+    over it first, so a sink's guard and its write read the same
+    persisted rows and the update set's plan runs once per call, not
+    once per guard plus once for the write. An input the caller
+    already cached is used as is and left cached."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        # let AQE coalesce the cached plan's last shuffle, as it would
+        # for the uncached write; without it the cache keeps every
+        # shuffle partition and the table is written as that many files
+        conf = df.sparkSession.conf
+        prev = conf.get(_CACHE_COALESCE)
+        conf.set(_CACHE_COALESCE, "true")
+        try:
+            df.persist()
+        finally:
+            conf.set(_CACHE_COALESCE, prev)
+    try:
+        assert_keys_unique(df, keys, table)
+        yield
+    finally:
+        if owned:
+            df.unpersist()
 
 
 def merge_upsert_df(
@@ -213,31 +270,34 @@ def merge_upsert_parquet(
     This rewrites the WHOLE table per batch — fine for dimension-sized
     targets (the reference's tables); for large partitioned facts use
     ``merge_upsert_partitioned``, which only rewrites the hive
-    partitions present in the update set."""
-    assert_keys_not_null(updates, keys, table or target_path)
-    # merge_upsert_df's contract requires per-key-unique updates;
-    # enforce it here (like the reference's Postgres PK would) instead
-    # of silently persisting duplicate "PK" rows
-    assert_keys_unique(updates, keys, table or target_path)
-    # portable existence probe: read-or-None against the path's own
-    # filesystem (an empty or absent table reads as None, same as the
-    # old listdir check — but correct on object-store URIs too)
-    base = try_read_parquet(spark, target_path)
-    if base is not None:
-        merged = merge_upsert_df(base, updates, keys, precedence_col=precedence_col)
-    else:
-        merged = updates
-    # staging lives under a hidden per-TARGET directory next to the
-    # table (same scheme, so the swap is a same-filesystem rename);
-    # directory boundaries keep sibling tables' staging disjoint, and
-    # single-writer-per-table (the sink's contract) makes sweeping
-    # stale staging from a prior crash safe
-    stage_root = f"{parent(target_path)}/.merge/{basename(target_path)}"
-    fs_delete(spark, stage_root)
-    out = f"{stage_root}/stage_{uuid.uuid4().hex[:8]}/data"
-    # .write.parquet is an action: the output is fully on disk when it
-    # returns (a re-read+count here would just double the read I/O)
-    merged.write.mode("overwrite").parquet(out)
+    partitions present in the update set.
+
+    ``updates`` is evaluated once: it is persisted, the PK guards
+    check it in one aggregation before anything is staged or swapped,
+    and the merged write reads the persisted rows."""
+    # merge_upsert_df's contract requires per-key-unique updates; the
+    # guard enforces it here (like the reference's Postgres PK would)
+    # instead of silently persisting duplicate "PK" rows
+    with _guarded_once(updates, keys, table or target_path):
+        # portable existence probe: read-or-None against the path's own
+        # filesystem (an empty or absent table reads as None, same as the
+        # old listdir check — but correct on object-store URIs too)
+        base = try_read_parquet(spark, target_path)
+        if base is not None:
+            merged = merge_upsert_df(base, updates, keys, precedence_col=precedence_col)
+        else:
+            merged = updates
+        # staging lives under a hidden per-TARGET directory next to the
+        # table (same scheme, so the swap is a same-filesystem rename);
+        # directory boundaries keep sibling tables' staging disjoint, and
+        # single-writer-per-table (the sink's contract) makes sweeping
+        # stale staging from a prior crash safe
+        stage_root = f"{parent(target_path)}/.merge/{basename(target_path)}"
+        fs_delete(spark, stage_root)
+        out = f"{stage_root}/stage_{uuid.uuid4().hex[:8]}/data"
+        # .write.parquet is an action: the output is fully on disk when it
+        # returns (a re-read+count here would just double the read I/O)
+        merged.write.mode("overwrite").parquet(out)
     replace_dir(spark, out, target_path)
     fs_delete(spark, stage_root)
 
@@ -274,33 +334,32 @@ def merge_upsert_partitioned(
     same contract as ``merge_upsert_df`` — so a late-arriving batch
     of OLDER events cannot clobber newer rows already merged into a
     partition."""
-    assert_keys_not_null(updates, keys, table or target_path)
-    assert_keys_unique(updates, keys, table or target_path)
-    if try_read_parquet(spark, target_path) is None:
-        updates.write.mode("overwrite").partitionBy(*partition_cols).parquet(target_path)
-        return
-    touched = updates.select(*partition_cols).distinct().collect()
-    cond = F.lit(False)
-    for row in touched:
-        c = F.lit(True)
-        for col in partition_cols:
-            # eqNullSafe, not ==: a NULL partition value (hive
-            # __HIVE_DEFAULT_PARTITION__) compared with == yields NULL,
-            # which would silently read ZERO base rows for that
-            # partition while dynamic overwrite still rewrites it —
-            # deleting every previously-merged row it held
-            c = c & F.col(col).eqNullSafe(F.lit(row[col]))
-        cond = cond | c
-    base = spark.read.parquet(target_path).filter(cond)
-    merged = merge_upsert_df(
-        base, updates.select(*base.columns), keys, precedence_col=precedence_col
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(target_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    with _guarded_once(updates, keys, table or target_path):
+        if try_read_parquet(spark, target_path) is None:
+            updates.write.mode("overwrite").partitionBy(*partition_cols).parquet(target_path)
+            return
+        touched = updates.select(*partition_cols).distinct().collect()
+        cond = F.lit(False)
+        for row in touched:
+            c = F.lit(True)
+            for col in partition_cols:
+                # eqNullSafe, not ==: a NULL partition value (hive
+                # __HIVE_DEFAULT_PARTITION__) compared with == yields NULL,
+                # which would silently read ZERO base rows for that
+                # partition while dynamic overwrite still rewrites it —
+                # deleting every previously-merged row it held
+                c = c & F.col(col).eqNullSafe(F.lit(row[col]))
+            cond = cond | c
+        base = spark.read.parquet(target_path).filter(cond)
+        merged = merge_upsert_df(
+            base, updates.select(*base.columns), keys, precedence_col=precedence_col
+        )
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(target_path)
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def apply_cdc(
@@ -372,8 +431,6 @@ def jdbc_upsert(
     with duplicates, Postgres rejects same-statement double updates
     ('cannot affect row a second time') and cross-partition duplicates
     would commit in nondeterministic order."""
-    assert_keys_not_null(df, keys, table)
-    assert_keys_unique(df, keys, table)
     if connect is None:
         if dsn is None:
             raise ValueError("jdbc_upsert needs either `connect` or `dsn`")
@@ -409,4 +466,5 @@ def jdbc_upsert(
         finally:
             conn.close()
 
-    df.foreachPartition(write_partition)
+    with _guarded_once(df, keys, table):
+        df.foreachPartition(write_partition)

@@ -366,3 +366,123 @@ def test_merge_upsert_parquet_rejects_duplicate_keys(spark, tmp_path):
     dup = spark.createDataFrame([(1, "a"), (1, "b")], "k long, v string")
     with pytest.raises(ValueError, match="duplicate"):
         merge_upsert_parquet(spark, dup, str(tmp_path / "t"), keys=["k"])
+
+
+# ---------------------------------------------------------------------------
+# Keyed sinks: one evaluation of the update set per call, guards unchanged
+# ---------------------------------------------------------------------------
+
+from pyspark import StorageLevel  # noqa: E402
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_run_pipeline_guard_failure_releases_cached_products(spark, tmp_path):
+    """A payload that repeats a definition id gives the prices upsert
+    duplicate keys; its guard failure must not leak the cached product
+    dimension (nor the sink's persisted update set)."""
+    adult_1d = PRODUCTS[0]["productDefinitions"][0]
+    payload = json.dumps(
+        {"data": [{"name": "skitickets", "productDefinitions": [adult_1d, adult_1d]}]}
+    )
+    before = _persisted_ids(spark)
+    with pytest.raises(ValueError, match="duplicate"):
+        run_pipeline(
+            spark,
+            payloads=[payload],
+            changes=_changes(spark, [(1, "2026-01-05", 100, 1)]),
+            season=SEASON,
+            out_dir=str(tmp_path),
+            run_ts=RUN_TS,
+        )
+    assert _persisted_ids(spark) - before == set()
+
+
+@pytest.mark.parametrize("sink", ["parquet", "partitioned", "jdbc"])
+def test_keyed_sinks_evaluate_update_set_once(spark, tmp_path, sink):
+    """Guards, touched-partition probe and write all read one
+    evaluation of the update set: a Python UDF feeding the key (and,
+    through it, the partition column) runs once per row per call."""
+    from etl_pricenow_to_leukerbadb_spark.sinks.upsert import (
+        jdbc_upsert,
+        merge_upsert_partitioned,
+    )
+
+    rows = [(k, k * 10) for k in range(6)]
+    acc = spark.sparkContext.accumulator(0)
+
+    def bump(k):
+        acc.add(1)
+        return k
+
+    def frame(udf_key: bool):
+        df = spark.createDataFrame(rows, "k long, v long")
+        if udf_key:
+            df = df.withColumn("k", F.udf(bump, "long")("k"))
+        return df.withColumn("p", F.col("k") % 2).coalesce(1)
+
+    target, db = str(tmp_path / "t"), str(tmp_path / "sink.db")
+    with sqlite3.connect(db) as c:
+        c.execute("CREATE TABLE t (k INTEGER PRIMARY KEY, v INTEGER, p INTEGER)")
+    write = {
+        "parquet": lambda df: merge_upsert_parquet(spark, df, target, keys=["k"]),
+        "partitioned": lambda df: merge_upsert_partitioned(
+            spark, df, target, keys=["k"], partition_cols=["p"]
+        ),
+        "jdbc": lambda df: jdbc_upsert(
+            df, table="t", keys=["k"],
+            connect=functools.partial(_sqlite_connect, db), paramstyle="?",
+        ),
+    }[sink]
+    write(frame(udf_key=False))  # the counted call merges into an existing target
+    write(frame(udf_key=True))
+    assert acc.value == len(rows)
+
+
+def test_merge_upsert_parquet_guards_existing_target(spark, tmp_path):
+    """Against an existing table the guards still refuse null and
+    duplicate keys before anything is staged: the table is untouched,
+    no staging is left, nothing stays persisted, and an input the
+    caller cached stays cached."""
+    schema = "k long, v string"
+    target = str(tmp_path / "t")
+    stage = tmp_path / ".merge" / "t"
+    merge_upsert_parquet(spark, spark.createDataFrame([(1, "a"), (2, "b")], schema), target, ["k"])
+    table = sorted(spark.read.parquet(target).collect())
+    before = _persisted_ids(spark)
+    for bad, msg in [
+        ([(None, "x"), (3, "y")], "null in key"),
+        ([(None, "x"), (None, "y")], "null in key"),  # a null key wins over its duplicate
+        ([(1, "x"), (1, "y")], "duplicate"),
+    ]:
+        with pytest.raises(ValueError, match=msg):
+            merge_upsert_parquet(spark, spark.createDataFrame(bad, schema), target, ["k"])
+        assert sorted(spark.read.parquet(target).collect()) == table
+        assert not stage.exists()
+        assert _persisted_ids(spark) - before == set()
+
+    merge_upsert_parquet(spark, spark.createDataFrame([(2, "c")], schema), target, ["k"])
+    assert _persisted_ids(spark) - before == set()
+    cached = spark.createDataFrame([(3, "d")], schema).cache()
+    merge_upsert_parquet(spark, cached, target, ["k"])
+    assert cached.storageLevel != StorageLevel.NONE
+    cached.unpersist()
+    assert _persisted_ids(spark) - before == set()
+    assert sorted(tuple(r) for r in spark.read.parquet(target).collect()) == [
+        (1, "a"), (2, "c"), (3, "d"),
+    ]
+
+
+def test_merge_upsert_parquet_writes_the_plain_write_layout(spark, tmp_path):
+    """Persisting the update set must not change the files the sink
+    writes: an update set ending in a shuffle lands in as many files as
+    a plain write of it (AQE still coalesces the last shuffle)."""
+    import glob
+
+    updates = spark.range(40).groupBy((F.col("id") % 10).alias("k")).agg(F.count("*").alias("n"))
+    plain, merged = str(tmp_path / "plain"), str(tmp_path / "merged")
+    updates.write.parquet(plain)
+    merge_upsert_parquet(spark, updates, merged, ["k"])
+    assert len(glob.glob(f"{merged}/*.parquet")) == len(glob.glob(f"{plain}/*.parquet"))
