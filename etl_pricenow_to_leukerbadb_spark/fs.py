@@ -184,7 +184,13 @@ def try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
     """Spark-side existence probe: the parquet table at ``path``, or
     None when the path is absent or holds no readable parquet (e.g. an
     empty directory). This is THE portable "does the table exist yet"
-    check — it answers against the same filesystem the write targets."""
+    check — it answers against the same filesystem the write targets.
+    An absent path is answered by the filesystem alone: letting the
+    read fail instead costs a failed analysis and logs a
+    ``FileStreamSink`` warning with a JVM stack trace."""
+    fs, p = _fs(spark, path)
+    if not fs.exists(p):
+        return None
     try:
         return spark.read.parquet(path)
     except AnalysisException:

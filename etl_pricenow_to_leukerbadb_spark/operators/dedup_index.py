@@ -7,21 +7,27 @@ every call — the right shape for an oracle-checkable query, not for
 the production contract at 100 TB: there the corpus grows by a daily
 delta, and "is anything in today's delta a near-dup of the existing
 corpus?" must hash O(delta), never O(corpus). This module is the
-dedup-family analog of ``operators/ann_index.py``, with TWO frontends
-over one persisted shape:
+dedup-family analog of ``operators/ann_index.py``, with TWO hashing
+frontends over one persisted shape:
 
 - **Text** (MinHash+LSH): ``build_dedup_index`` /
-  ``query_dedup_candidates`` / ``append_to_dedup_index`` /
-  ``fsck_dedup_index`` — shingle-level near-dups, the blocking
-  structure of ``dd_minhash_lsh``. Documents too short to shingle
-  fail the build/append loudly (they would otherwise be silently
-  unblockable forever); ``allow_short=True`` opts out.
+  ``query_dedup_candidates`` / ``append_to_dedup_index`` —
+  shingle-level near-dups, the blocking structure of
+  ``dd_minhash_lsh``. Documents too short to shingle fail the
+  build/append loudly (they would otherwise be silently unblockable
+  forever); ``allow_short=True`` opts out.
 - **Vector** (sign-LSH over embeddings): ``build_vec_dedup_index`` /
-  ``query_vec_dedup_candidates`` / ``append_to_vec_dedup_index`` /
-  ``fsck_vec_dedup_index`` — embedding-cosine near-dups, the blocking
-  structure of ``dd_embedding_near_dup_hi``. The hyperplanes are
-  deterministic functions of (plane id, dim) — the geometry in meta
-  fully determines every bucket, so nothing random needs persisting.
+  ``query_vec_dedup_candidates`` / ``append_to_vec_dedup_index`` —
+  embedding-cosine near-dups, the blocking structure of
+  ``dd_embedding_near_dup_hi``. The hyperplanes are deterministic
+  functions of (plane id, dim) — the geometry in meta fully
+  determines every bucket, so nothing random needs persisting.
+
+Maintenance exists ONCE for both kinds: ``fsck_dedup_index``,
+``compact_dedup_index``, ``compact_dedup_index_serving``,
+``migrate_dedup_index_to_serving`` and ``append_gap_ids`` read the
+index kind from its meta (``_scheme_of``). The ``_vec`` spellings of
+those five names are aliases of the same functions.
 
 Both persist the same layout under ``path/``:
 
@@ -72,6 +78,8 @@ standing state without recomputing it.
 from __future__ import annotations
 
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -85,25 +93,79 @@ from ..fs import (
 from .serving import resolve_serving_root as _resolve_index_root
 from .dedup import band_table, minhash_signatures
 
-_TEXT_META_COLS = (
-    "k_shingle",
-    "n_hashes",
-    "bands",
-    "id_col",
-    "text_col",
-    "id_type",
-    "build_id",
+
+@dataclass(frozen=True)
+class _Scheme:
+    """What the text (MinHash bands) and vector (sign-LSH tables)
+    indexes do differently; everything else in the lifecycle is one
+    implementation. ``build``/``append``/``query`` name this module's
+    frontends and ``probe_merge`` names ``cluster_index``'s tail —
+    NAMES, looked up on the module at call time, so a wrapper patched
+    onto the module attribute (tracing, tests) is what runs."""
+
+    meta_cols: tuple[str, ...]
+    k_key: str  # meta key of the exact per-id bands/ row count
+    rows_noun: str  # what one bands/ row is, in error messages
+    fsck_name: str  # the repair entry point error messages name
+    stream_schema: Callable[[dict], str]  # micro-batch DDL from meta
+    # expected_ids(delta, params, text_col): the delta ids that must
+    # end up fully banded (the gap-classification population)
+    expected_ids: Callable[[DataFrame, dict, str], DataFrame]
+    build: str
+    append: str
+    query: str
+    probe_merge: str
+
+
+_TEXT = _Scheme(
+    meta_cols=(
+        "k_shingle", "n_hashes", "bands", "id_col", "text_col", "id_type",
+        "build_id",
+    ),
+    k_key="bands",
+    rows_noun="band",
+    fsck_name="fsck_dedup_index",
+    stream_schema=lambda p: (
+        f"{p['id_col']} {p['id_type']}, {p['text_col']} string"
+    ),
+    # only SHINGLABLE docs get band rows (allow_short=True lets the
+    # rest through unbanded, legitimately)
+    expected_ids=lambda delta, p, text_col: minhash_signatures(
+        delta, p["id_col"], text_col, p["k_shingle"], p["n_hashes"]
+    ).select(p["id_col"]),
+    build="build_dedup_index",
+    append="append_to_dedup_index",
+    query="query_dedup_candidates",
+    probe_merge="probe_and_merge_delta",
 )
-_VEC_META_COLS = (
-    "n_planes",
-    "n_tables",
-    "dim",
-    "id_col",
-    "vec_col",
-    "id_type",
-    "vec_elem_type",
-    "build_id",
+_VEC = _Scheme(
+    meta_cols=(
+        "n_planes", "n_tables", "dim", "id_col", "vec_col", "id_type",
+        "vec_elem_type", "build_id",
+    ),
+    k_key="n_tables",
+    rows_noun="bucket",
+    fsck_name="fsck_vec_dedup_index",
+    stream_schema=lambda p: (
+        f"{p['id_col']} {p['id_type']}, "
+        f"{p['vec_col']} array<{p['vec_elem_type']}>"
+    ),
+    # no unbandable class: malformed vectors refuse at append time
+    # (_vec_buckets), so every delta id carries n_tables rows
+    expected_ids=lambda delta, p, text_col: delta.select(F.col(p["id_col"])),
+    build="build_vec_dedup_index",
+    append="append_to_vec_dedup_index",
+    query="query_vec_dedup_candidates",
+    probe_merge="probe_and_merge_delta_vec",
 )
+
+
+def _scheme_of(params: dict) -> _Scheme | None:
+    """The scheme whose meta columns ``params`` carries (the index
+    records its own kind), or None for a meta that is neither."""
+    return next(
+        (s for s in (_TEXT, _VEC) if set(s.meta_cols) <= set(params)), None
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -194,14 +256,18 @@ def invalidate_dedup_handles(path: str | None = None) -> None:
 
 
 def _load_bucket_index(
-    spark: SparkSession, path: str, meta_cols: tuple, name: str
+    spark: SparkSession, path: str, name: str, scheme: _Scheme | None = None
 ) -> tuple[DataFrame, dict]:
     """(bands, params) with the generation-token check: the commit
     marker's build_id must match meta's. Params come from the
     validated per-process handle cache when possible (one marker job
     instead of meta+marker). Serving-layout roots
     (``migrate_dedup_index_to_serving``) resolve their ``CURRENT``
-    pointer here, so probes read the live generation transparently."""
+    pointer here, so probes read the live generation transparently.
+
+    ``scheme`` pins the kind a kind-specific caller needs: an index of
+    the OTHER kind refuses as malformed meta, on cache hits too. With
+    ``None`` either kind loads (the maintenance entry points)."""
     path = _resolve_index_root(spark, path)
     key = (spark.sparkContext.applicationId, path.rstrip("/"))
     cached = _HANDLE_CACHE.get(key)
@@ -209,34 +275,45 @@ def _load_bucket_index(
         commit = _try_read_parquet(spark, f"{path}/commit")
         rows = commit.collect() if commit is not None else []
         if len(rows) == 1 and rows[0]["build_id"] == cached["build_id"]:
-            return spark.read.parquet(f"{path}/bands"), dict(cached["params"])
-        _HANDLE_CACHE.pop(key, None)  # superseded or crashed generation
-    meta_df = _try_read_parquet(spark, f"{path}/meta")
-    if meta_df is None:
-        # a raw AnalysisException here sent the operator chasing a
-        # path typo; name the two real states instead — not an index,
-        # or a torn write/crashed build (the incident recipe the
-        # curation jobs' torn-serving refusal points at)
-        raise ValueError(
-            f"{name}: no readable meta at {path}/meta — either the "
-            "path is not a bucket index, or a torn write/crashed "
-            "build left meta unreadable. Check the path; for a "
-            "serving root restore CURRENT to the newest complete "
-            "generation, else rebuild with overwrite=True"
-        )
-    meta_rows = meta_df.collect()
-    if len(meta_rows) != 1 or set(meta_cols) - set(meta_rows[0].asDict()):
+            params = dict(cached["params"])
+        else:
+            _HANDLE_CACHE.pop(key, None)  # superseded or crashed generation
+            cached = None
+    if cached is None:
+        meta_df = _try_read_parquet(spark, f"{path}/meta")
+        if meta_df is None:
+            # a raw AnalysisException here sent the operator chasing a
+            # path typo; name the two real states instead — not an
+            # index, or a torn write/crashed build (the incident recipe
+            # the curation jobs' torn-serving refusal points at)
+            raise ValueError(
+                f"{name}: no readable meta at {path}/meta — either the "
+                "path is not a bucket index, or a torn write/crashed "
+                "build left meta unreadable. Check the path; for a "
+                "serving root restore CURRENT to the newest complete "
+                "generation, else rebuild with overwrite=True"
+            )
+        meta_rows = meta_df.collect()
+        params = meta_rows[0].asDict() if len(meta_rows) == 1 else {}
+    found = _scheme_of(params)
+    if found is None or (scheme is not None and found is not scheme):
         raise ValueError(f"{name}: malformed meta at {path}/meta")
-    params = meta_rows[0].asDict()
-    commit = _try_read_parquet(spark, f"{path}/commit")
-    commit_rows = commit.collect() if commit is not None else []
-    if len(commit_rows) != 1 or commit_rows[0]["build_id"] != params["build_id"]:
-        raise ValueError(
-            f"{name}: index at {path} has no matching commit marker — "
-            "the build (or an overwrite rebuild) crashed before "
-            "completing. Rebuild with overwrite=True"
-        )
-    _HANDLE_CACHE[key] = {"build_id": params["build_id"], "params": dict(params)}
+    if cached is None:
+        commit = _try_read_parquet(spark, f"{path}/commit")
+        commit_rows = commit.collect() if commit is not None else []
+        if (
+            len(commit_rows) != 1
+            or commit_rows[0]["build_id"] != params["build_id"]
+        ):
+            raise ValueError(
+                f"{name}: index at {path} has no matching commit marker "
+                "— the build (or an overwrite rebuild) crashed before "
+                "completing. Rebuild with overwrite=True"
+            )
+        _HANDLE_CACHE[key] = {
+            "build_id": params["build_id"],
+            "params": dict(params),
+        }
     return spark.read.parquet(f"{path}/bands"), params
 
 
@@ -292,22 +369,18 @@ def _probe_bucket_index(
     )
 
 
-def _fsck_bucket_index(
-    spark: SparkSession,
-    path: str,
-    load,
-    k_key: str,
-    name: str,
-    strict: bool,
-    repair: bool,
+def fsck_dedup_index(
+    spark: SparkSession, path: str, strict: bool = True, repair: bool = False
 ) -> dict:
-    """Whole-index consistency sweep — scheduled maintenance, not a
-    per-append tax (the append guard is delta-scoped).
+    """Whole-index consistency sweep of a text or vector near-dup index
+    — scheduled maintenance, not a per-append tax (the append guard is
+    delta-scoped).
 
     Every indexed id must carry exactly K distinct (band, bucket)
-    rows (K = meta's ``k_key``): fewer/more distinct rows = a partial
-    append (crash during the bands file-commit), raw > distinct = a
-    double-append's byte-identical duplicates (bucketing is
+    rows (K = ``bands`` for text, ``n_tables`` for vectors, read from
+    meta): fewer/more distinct rows = a partial append (crash during
+    the bands file-commit), raw > distinct = a double-append's
+    byte-identical duplicates (bucketing is
     deterministic under the frozen geometry). ``repair=True`` prunes
     in place — ``distinct()`` reconstructs double-appends exactly,
     partial ids drop back to their never-appended state (re-ingest
@@ -320,9 +393,10 @@ def _fsck_bucket_index(
 
     root_report = _root_report(spark, path)
     path = _resolve_index_root(spark, path)
-    bands_df, params = load(spark, path)
+    bands_df, params = _load_bucket_index(spark, path, "fsck_dedup_index")
+    scheme = _scheme_of(params)
     id_col = params["id_col"]
-    k = int(params[k_key])
+    k = int(params[scheme.k_key])
     stats = (
         bands_df.groupBy(id_col)
         .agg(
@@ -382,11 +456,12 @@ def _fsck_bucket_index(
             "pruned_ids": report["n_ids"] - n_after,
             "n_ids_after": n_after,
         }
-        report["post_repair"] = _fsck_bucket_index(
-            spark, path, load, k_key, name, strict=True, repair=False
+        report["post_repair"] = fsck_dedup_index(
+            spark, path, strict=True, repair=False
         )
         return report
     if strict and violations:
+        name = scheme.fsck_name
         raise RuntimeError(
             f"{name}: index at {path} is inconsistent — {report}. A "
             "prior append crashed mid-commit or was double-applied. Run "
@@ -396,18 +471,17 @@ def _fsck_bucket_index(
     return report
 
 
-def _compact_bucket_index(
+def compact_dedup_index(
     spark: SparkSession,
     path: str,
-    load,
-    target_files: int | None,
+    target_files: int | None = None,
     force: bool = False,
 ) -> dict:
-    """Compact a streaming-ingested bucket index's small files — the
-    band-table analog of ``ann_index.compact_index`` (each micro-batch
-    appends one small file to ``bands/`` and one marker file; the
-    file-listing and footer reads of every probe scale with that
-    count). The rewrite sorts ``bands/`` by (id, band) range-
+    """Compact a streaming-ingested text or vector near-dup index's
+    small files — the band-table analog of ``ann_index.compact_index``
+    (each micro-batch appends one small file to ``bands/`` and one
+    marker file; the file-listing and footer reads of every probe
+    scale with that count). The rewrite sorts ``bands/`` by (id, band) range-
     partitioned on id, so the append guard's ``[min, max]``-pruned
     probe skips files via parquet min/max statistics for any ingest
     order. Crash safety: staged rewrite, row-count invariant BEFORE
@@ -429,7 +503,8 @@ def _compact_bucket_index(
     )
     logical_root = path  # where the ingest claim lives, pre-resolution
     path = _resolve_index_root(spark, path)  # in-place compact of the live gen
-    _, params = load(spark, path)  # strict: marker must match
+    # strict: marker must match
+    _, params = _load_bucket_index(spark, path, "compact_dedup_index")
     id_col = params["id_col"]
     plen = params.get("bucket_prefix_len") or 0
     _restore_markers_if_crashed(spark, path)
@@ -541,6 +616,16 @@ def _guard_append_delta(
     return True
 
 
+def _append_buckets(buckets: DataFrame, path: str, params: dict) -> None:
+    """Append a delta's (id, band, bucket) rows to ``bands/`` in the
+    index's layout (flat, or hive-partitioned on the bucket prefix)."""
+    plen = params.get("bucket_prefix_len") or 0
+    if plen:
+        buckets = buckets.withColumn("bp", _bp(plen))
+    writer = buckets.write.mode("append")
+    (writer.partitionBy("bp") if plen else writer).parquet(f"{path}/bands")
+
+
 def verify_append_complete(
     spark: SparkSession,
     path: str,
@@ -608,57 +693,37 @@ def append_gap_ids(
     docs_delta: DataFrame,
     text_col: str = "text",
 ) -> DataFrame:
-    """Per-id append-state detail behind ``verify_append_complete``'s
-    boolean: every EXPECTED (shinglable) delta id that is not fully
-    banded, as ``(id_col, n_rows)`` — ``n_rows = 0`` means the id
-    never landed (or fsck pruned it back to never-appended), ``1 ..
-    bands-1`` means a crashed append left a partial band set that MUST
-    be pruned (``fsck_dedup_index(repair=True)``) before any
-    re-append, or its bucket rows would duplicate. The split is what
-    lets a caller SELF-HEAL a mixed delta: zero-row ids are safe to
-    re-append exactly as if new (the append guard matches exact ids,
-    not spans), partial ids are not. Empty result == complete."""
+    """Per-id append state of a delta against a text or vector index:
+    every EXPECTED delta id that is not fully banded, as ``(id_col,
+    n_rows)``. Expected means shinglable docs for text (docs with
+    fewer than ``k_shingle`` tokens legitimately have no rows, the
+    ``allow_short=True`` case; ``text_col`` names their column) and
+    every delta id for vectors (malformed vectors refuse at append
+    time, ``_vec_buckets``). ``n_rows = 0`` means the id never landed
+    (or fsck pruned it back to never-appended); ``1 .. K-1`` means a
+    crashed append left a partial row set that MUST be pruned
+    (``fsck_dedup_index(repair=True)``) before any re-append, or its
+    bucket rows would duplicate. The split is what lets a caller
+    SELF-HEAL a mixed delta (``orchestrate``'s daily jobs): zero-row
+    ids are safe to re-append exactly as if new (the append guard
+    matches exact ids, not spans), partial ids are not. Empty result
+    == complete.
+
+    The corpus-side scan is range-pruned to the delta's id span (the
+    append guard's shape). The span comes from the RAW delta, not from
+    ``expected``: min/max over the text rule's ids would evaluate the
+    whole minhash pipeline for two bounds, and a superset span is
+    still exact because the left_semi join restricts to expected ids.
+    An all-unshinglable text delta gets no early exit: detecting it
+    would cost a minhash pass on every call, while its own cost is one
+    range-pruned bands scan (AQE does not collapse the join on an
+    empty build side; the result is the correct empty frame)."""
     path = _resolve_index_root(spark, path)
-    bands_df, params = load_dedup_index(spark, path)
+    bands_df, params = _load_bucket_index(spark, path, "append_gap_ids")
+    scheme = _scheme_of(params)
     id_col = params["id_col"]
-    expected = minhash_signatures(
-        docs_delta, id_col, text_col, params["k_shingle"], params["n_hashes"]
-    ).select(id_col)
-    return _bucket_gap_ids(
-        bands_df, expected, docs_delta, id_col, int(params["bands"])
-    )
-
-
-def _bucket_gap_ids(
-    bands_df: DataFrame,
-    expected: DataFrame,
-    span_of: DataFrame,
-    id_col: str,
-    rows_expected: int,
-) -> DataFrame:
-    """The per-id completeness classification both gap reporters
-    share: every EXPECTED id not carrying exactly ``rows_expected``
-    band rows, as ``(id_col, n_rows)``. Corpus-side scan range-pruned
-    to the delta's id span (the same shape as the append guard);
-    only the frontends differ — what "expected" means (shinglable
-    docs vs all delta ids) and the per-id row constant (bands vs
-    n_tables).
-
-    ``span_of`` supplies the pruning bounds and is the RAW delta
-    frame, not ``expected``: aggregating min/max on the text
-    frontend's ``expected`` would evaluate the whole minhash pipeline
-    just for two bounds (Catalyst cannot prune the signature agg),
-    where the raw frame's id column is a cheap scan — and a superset
-    span is still exact, because the left_semi join restricts to
-    expected ids. The degenerate shape (non-empty delta, EMPTY
-    expected — an all-unshinglable text delta) deliberately gets no
-    explicit early-exit: detecting it would cost a delta-sized
-    minhash evaluation on EVERY call to optimize a rare case, while
-    the case's own cost is one bands scan range-pruned to the delta's
-    id span by the pushed min/max filter (checked empirically: AQE
-    does NOT collapse this join on an empty build side — the scan
-    runs, pruned; returns the correct empty frame)."""
-    estats = span_of.agg(
+    expected = scheme.expected_ids(docs_delta, params, text_col)
+    estats = docs_delta.agg(
         F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
     ).collect()[0]
     if estats["lo"] is None:
@@ -677,35 +742,7 @@ def _bucket_gap_ids(
             id_col,
             F.coalesce(F.col("n_rows"), F.lit(0).cast("long")).alias("n_rows"),
         )
-        .filter(F.col("n_rows") != int(rows_expected))
-    )
-
-
-def vec_append_gap_ids(
-    spark: SparkSession,
-    path: str,
-    vecs_delta: DataFrame,
-) -> DataFrame:
-    """Vector twin of ``append_gap_ids``: every delta id not fully
-    bucketed in a sign-LSH index, as ``(id_col, n_rows)``. Expected =
-    EVERY delta id — the vec frontend has no unshinglable class
-    (malformed vectors refuse loudly at build/append time,
-    ``_vec_buckets``), so each appended id carries exactly
-    ``n_tables`` rows by construction. ``n_rows = 0`` means the id
-    never landed (or fsck pruned it — safe to re-append), ``1 ..
-    n_tables-1`` is a crashed append's torn bucket set that must go
-    through ``fsck_vec_dedup_index(repair=True)`` before any
-    re-append. Empty result == complete; the split powers
-    ``orchestrate.curate_corpus_daily_vec``'s self-heal arm exactly
-    as the text classification powers the text job's."""
-    path = _resolve_index_root(spark, path)
-    bands_df, params = _load_bucket_index(
-        spark, path, _VEC_META_COLS, "vec_append_gap_ids"
-    )
-    id_col = params["id_col"]
-    expected = vecs_delta.select(F.col(id_col))
-    return _bucket_gap_ids(
-        bands_df, expected, vecs_delta, id_col, int(params["n_tables"])
+        .filter(F.col("n_rows") != int(params[scheme.k_key]))
     )
 
 
@@ -816,7 +853,7 @@ def build_dedup_index(
 
 
 def load_dedup_index(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
-    return _load_bucket_index(spark, path, _TEXT_META_COLS, "load_dedup_index")
+    return _load_bucket_index(spark, path, "load_dedup_index", _TEXT)
 
 
 def query_dedup_candidates(
@@ -844,43 +881,6 @@ def query_dedup_candidates(
         id_col,
         band_table(sigs, id_col, params["n_hashes"], params["bands"]),
         bucket_prefix_len=params.get("bucket_prefix_len") or 0,
-    )
-
-
-def fsck_dedup_index(
-    spark: SparkSession, path: str, strict: bool = True, repair: bool = False
-) -> dict:
-    """Consistency sweep + optional repair for a text near-dup index —
-    semantics in ``_fsck_bucket_index``."""
-    return _fsck_bucket_index(
-        spark,
-        path,
-        lambda ss, p: _load_bucket_index(
-            ss, p, _TEXT_META_COLS, "fsck_dedup_index"
-        ),
-        "bands",
-        "fsck_dedup_index",
-        strict,
-        repair,
-    )
-
-
-def compact_dedup_index(
-    spark: SparkSession,
-    path: str,
-    target_files: int | None = None,
-    force: bool = False,
-) -> dict:
-    """Compact a text near-dup index's band table + ingest markers —
-    semantics in ``_compact_bucket_index``."""
-    return _compact_bucket_index(
-        spark,
-        path,
-        lambda ss, p: _load_bucket_index(
-            ss, p, _TEXT_META_COLS, "compact_dedup_index"
-        ),
-        target_files,
-        force,
     )
 
 
@@ -949,14 +949,11 @@ def append_to_dedup_index(
         bands_df, docs_delta, id_col, path, "append_to_dedup_index", dstats
     ):
         return
-    buckets = band_table(sigs, id_col, params["n_hashes"], params["bands"])
-    plen = params.get("bucket_prefix_len") or 0
-    if plen:
-        buckets.withColumn("bp", _bp(plen)).write.mode("append").partitionBy(
-            "bp"
-        ).parquet(f"{path}/bands")
-    else:
-        buckets.write.mode("append").parquet(f"{path}/bands")
+    _append_buckets(
+        band_table(sigs, id_col, params["n_hashes"], params["bands"]),
+        path,
+        params,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1067,9 +1064,7 @@ def build_vec_dedup_index(
 def load_vec_dedup_index(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, dict]:
-    return _load_bucket_index(
-        spark, path, _VEC_META_COLS, "load_vec_dedup_index"
-    )
+    return _load_bucket_index(spark, path, "load_vec_dedup_index", _VEC)
 
 
 def query_vec_dedup_candidates(
@@ -1169,48 +1164,11 @@ def query_vec_dedup_candidates(
     )
 
 
-def fsck_vec_dedup_index(
-    spark: SparkSession, path: str, strict: bool = True, repair: bool = False
-) -> dict:
-    """Consistency sweep + optional repair for a vector near-dup index
-    — semantics in ``_fsck_bucket_index`` (K = n_tables)."""
-    return _fsck_bucket_index(
-        spark,
-        path,
-        lambda ss, p: _load_bucket_index(
-            ss, p, _VEC_META_COLS, "fsck_vec_dedup_index"
-        ),
-        "n_tables",
-        "fsck_vec_dedup_index",
-        strict,
-        repair,
-    )
-
-
-def compact_vec_dedup_index(
-    spark: SparkSession,
-    path: str,
-    target_files: int | None = None,
-    force: bool = False,
-) -> dict:
-    """Compact a vector near-dup index's band table + ingest markers —
-    semantics in ``_compact_bucket_index``."""
-    return _compact_bucket_index(
-        spark,
-        path,
-        lambda ss, p: _load_bucket_index(
-            ss, p, _VEC_META_COLS, "compact_vec_dedup_index"
-        ),
-        target_files,
-        force,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Serving layout (pointer indirection), shared with the ANN index:
 # the generation/pointer mechanics live in serving.py (resolve_serving_
 # root / migrate_root_to_serving / write_current_pointer) and are layout-
-# agnostic; the wrappers below plug in the bucket loaders and the
+# agnostic; the functions below plug in the bucket loader and the
 # band-table compaction so a DEDUP gate can also be compacted with
 # zero reader downtime (probes planned before/during/after the pointer
 # swap all succeed — same contract, same tests' shape).
@@ -1220,37 +1178,29 @@ def compact_vec_dedup_index(
 def migrate_dedup_index_to_serving(
     spark: SparkSession, path: str, force: bool = False
 ) -> str:
-    """One-time flat -> serving migration of a text near-dup index;
-    mechanics in ``serving.migrate_root_to_serving``."""
+    """One-time flat -> serving migration of a text or vector near-dup
+    index; mechanics in ``serving.migrate_root_to_serving``."""
     from .serving import migrate_root_to_serving
 
     return migrate_root_to_serving(
-        spark, path, lambda ss, p: load_dedup_index(ss, p), force=force
+        spark,
+        path,
+        lambda ss, p: _load_bucket_index(
+            ss, p, "migrate_dedup_index_to_serving"
+        ),
+        force=force,
     )
 
 
-def migrate_vec_dedup_index_to_serving(
-    spark: SparkSession, path: str, force: bool = False
-) -> str:
-    """One-time flat -> serving migration of a vector near-dup index."""
-    from .serving import migrate_root_to_serving
-
-    return migrate_root_to_serving(
-        spark, path, lambda ss, p: load_vec_dedup_index(ss, p), force=force
-    )
-
-
-def _compact_bucket_serving(
+def compact_dedup_index_serving(
     spark: SparkSession,
     path: str,
-    load,
-    target_files: int | None,
-    name: str,
+    target_files: int | None = None,
     force: bool = False,
 ) -> dict:
-    """Reader-isolated bucket-index compaction: compact a COPY of the
-    live generation's band table into a new ``gen-<id>/``, byte-copy
-    the small artifacts, write the new generation's commit marker
+    """Zero-downtime compaction of a text or vector near-dup index
+    (reader-isolated): compact a COPY of the live generation's band
+    table into a new ``gen-<id>/``, byte-copy the small artifacts, write the new generation's commit marker
     LAST, swap the ``CURRENT`` pointer, and keep the superseded
     generation for one compaction interval (in-flight probe grace) —
     the dedup analog of ``ann_index.compact_index_serving``, same
@@ -1269,6 +1219,7 @@ def _compact_bucket_serving(
         write_current_pointer as _write_current,
     )
 
+    name = "compact_dedup_index_serving"
     p = path.rstrip("/")
     entry_claim = _refuse_if_ingest_active(spark, p, name, force)
     cur_name = fs_read_text(spark, f"{p}/{_CURRENT}")
@@ -1280,7 +1231,7 @@ def _compact_bucket_serving(
         )
     cur_name = cur_name.strip()
     cur = f"{p}/{cur_name}"
-    _, params = load(spark, cur)
+    _, params = _load_bucket_index(spark, cur, name)
     id_col = params["id_col"]
     plen = params.get("bucket_prefix_len") or 0
     new_name = f"gen-{uuid.uuid4().hex[:12]}"
@@ -1327,50 +1278,10 @@ def _compact_bucket_serving(
     return report
 
 
-def compact_dedup_index_serving(
-    spark: SparkSession,
-    path: str,
-    target_files: int | None = None,
-    force: bool = False,
-) -> dict:
-    """Zero-downtime compaction of a text near-dup index — semantics
-    in ``_compact_bucket_serving``."""
-    return _compact_bucket_serving(
-        spark,
-        path,
-        lambda ss, p: _load_bucket_index(
-            ss, p, _TEXT_META_COLS, "compact_dedup_index_serving"
-        ),
-        target_files,
-        "compact_dedup_index_serving",
-        force,
-    )
-
-
-def compact_vec_dedup_index_serving(
-    spark: SparkSession,
-    path: str,
-    target_files: int | None = None,
-    force: bool = False,
-) -> dict:
-    """Zero-downtime compaction of a vector near-dup index — semantics
-    in ``_compact_bucket_serving``."""
-    return _compact_bucket_serving(
-        spark,
-        path,
-        lambda ss, p: _load_bucket_index(
-            ss, p, _VEC_META_COLS, "compact_vec_dedup_index_serving"
-        ),
-        target_files,
-        "compact_vec_dedup_index_serving",
-        force,
-    )
-
-
 def append_to_vec_dedup_index(vecs_delta: DataFrame, path: str) -> None:
     """Bucket ONLY the delta under the frozen geometry and append.
     Guards and crash/retry contract: as ``append_to_dedup_index``
-    (recovery via ``fsck_vec_dedup_index(repair=True)``)."""
+    (recovery via ``fsck_dedup_index(repair=True)``)."""
     spark = vecs_delta.sparkSession
     # appends land in the CURRENT generation of a serving-layout index
     path = _resolve_index_root(spark, path)
@@ -1389,10 +1300,13 @@ def append_to_vec_dedup_index(vecs_delta: DataFrame, path: str) -> None:
         params["dim"],
         "append_to_vec_dedup_index",
     )
-    plen = params.get("bucket_prefix_len") or 0
-    if plen:
-        buckets.withColumn("bp", _bp(plen)).write.mode("append").partitionBy(
-            "bp"
-        ).parquet(f"{path}/bands")
-    else:
-        buckets.write.mode("append").parquet(f"{path}/bands")
+    _append_buckets(buckets, path, params)
+
+
+# The vector spellings of the maintenance entry points, kept so existing
+# callers keep working; each function reads the index kind from meta.
+fsck_vec_dedup_index = fsck_dedup_index
+compact_vec_dedup_index = compact_dedup_index
+compact_vec_dedup_index_serving = compact_dedup_index_serving
+migrate_vec_dedup_index_to_serving = migrate_dedup_index_to_serving
+vec_append_gap_ids = append_gap_ids

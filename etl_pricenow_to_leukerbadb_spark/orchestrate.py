@@ -215,17 +215,16 @@ def _ingest_delta_with_heal(
     delta,
     index_path: str,
     id_col: str,
-    append_fn,
-    gap_fn,
+    scheme,
     job: str,
-    fsck_name: str,
-    rows_noun: str,
     audit: dict,
+    append_kw: dict,
 ) -> bool:
     """Append ``delta`` to a STANDING bucket index, self-healing
     overlaps — the classified fallback both composed curation jobs
-    share (text and vector twins differ only in their append/gap
-    frontends, injected as callables). On the append guard's
+    share. ``scheme`` (``dedup_index._TEXT`` / ``_VEC``) names the
+    kind's append frontend (called with ``append_kw``) and the noun
+    and fsck name of the refusal. On the append guard's
     "already exist" refusal, classify every expected delta id: fully
     banded (a replay — probe-only), zero rows (never landed, or fsck
     pruned it — safe to append exactly as if new: the guard matches
@@ -243,33 +242,222 @@ def _ingest_delta_with_heal(
     records ``healed_ids`` in ``audit``."""
     from pyspark.sql import functions as F
 
+    from .operators import dedup_index
+
+    def append(df) -> None:
+        # resolved per call, so a wrapper patched onto the module runs
+        getattr(dedup_index, scheme.append)(df, index_path, **append_kw)
+
     try:
-        append_fn(delta)
+        append(delta)
         return True
     except ValueError as exc:
         if "already exist" not in str(exc):
             raise
-        gaps = gap_fn(delta).persist()
+        # text_col feeds the text rule's shingling; the vector rule
+        # ignores it
+        gaps = dedup_index.append_gap_ids(
+            delta.sparkSession,
+            index_path,
+            delta,
+            text_col=append_kw.get("text_col", "text"),
+        ).persist()
         try:
             n_partial = gaps.filter(F.col("n_rows") > 0).count()
             if n_partial:
                 raise RuntimeError(
                     f"{job}: {n_partial} delta id(s) are PARTIALLY "
-                    f"appended (a crashed append's torn {rows_noun} "
-                    f"rows, not a replay) — run {fsck_name}("
-                    f"'{index_path}', repair=True) to prune them back "
-                    "to never-appended, then retry: the retry appends "
-                    "the pruned ids and continues"
+                    "appended (a crashed append's torn "
+                    f"{scheme.rows_noun} rows, not a replay) — run "
+                    f"{scheme.fsck_name}('{index_path}', repair=True) to "
+                    "prune them back to never-appended, then retry: the "
+                    "retry appends the pruned ids and continues"
                 ) from exc
             missing = delta.join(gaps.select(id_col), id_col, "left_semi")
             n_missing = missing.count()
             if n_missing:
-                append_fn(missing)
+                append(missing)
                 audit["healed_ids"] = n_missing
                 return True
             return False
         finally:
             gaps.unpersist()
+
+
+def _stage_clock(stage_timings: dict[str, float] | None):
+    """``mark(stage)`` adds the wall seconds since the previous mark
+    (or since this call) to ``stage_timings[stage]`` — the daily jobs'
+    per-stage bench attribution; ``None`` records nothing."""
+    import time
+
+    last = [time.perf_counter()]
+
+    def mark(stage: str) -> None:
+        now = time.perf_counter()
+        if stage_timings is not None:
+            stage_timings[stage] = stage_timings.get(stage, 0.0) + (
+                now - last[0]
+            )
+        last[0] = now
+
+    return mark
+
+
+def _claim_through_snapshot(
+    delta,
+    index_path: str,
+    clusters_path: str,
+    snapshot_path: str,
+    id_col: str,
+    scheme,
+    job: str,
+    standing: bool,
+    build_kw: dict,
+    append_kw: dict,
+    probe_kw: dict,
+    keep_docs,
+    keep_score_col: str | None,
+    default_score,
+    compact_log_threshold: int | None,
+    snapshot_min_rows_behind: int,
+    snapshot_min_age_sec: float,
+    audit: dict,
+    mark,
+) -> None:
+    """The stages both daily curation jobs share once their own gate
+    has produced a non-empty, persisted ``delta``: index ingest and
+    cluster merge under the writer claim, the canonical keep table,
+    and the staleness-gated snapshot publish — filling ``audit`` and
+    marking ``index_ingest``, ``probe_merge``, ``keep_table`` and
+    ``snapshot``.
+
+    ``scheme`` picks the kind's frontends by NAME (build, append,
+    probe-merge tail), each looked up on its module at call time and
+    called with the job's ``build_kw`` / ``append_kw`` / ``probe_kw``.
+    The caller's scheme, not the index meta, decides them: an index
+    of the other kind then refuses in the kind-specific loader
+    ("malformed meta") instead of being ingested into. ``standing``
+    is True when the job's own gate already read the index's meta;
+    otherwise the root is probed here, under the claim. Keep scores
+    default to ``default_score`` (a Column) unless the caller names
+    ``keep_score_col``."""
+    from pyspark.sql import functions as F
+
+    from .fs import try_read_parquet
+    from .operators import cluster_index, dedup_index
+    from .operators.serving import require_untorn_serving_root
+
+    spark = delta.sparkSession
+    if compact_log_threshold is None:
+        compact_log_threshold = cluster_index.LOG_COMPACT_THRESHOLD
+
+    # -- index ingest + incremental cluster merge, under the
+    # clustering's single-writer claim for the WHOLE mutation span:
+    # the claim is taken BEFORE the index append (r11 verdict ask #6
+    # pinned the ordering) so a concurrent run refuses here, with ZERO
+    # structures touched — not after half its mutation landed. The
+    # append's own guards would keep the index consistent either way,
+    # but serializing the span also keeps the heal arm's gap
+    # classification from reading bands that another writer is
+    # appending to mid-scan. Released in the finally on every exit, by
+    # exact token (a force-cleaned marker re-claimed by a successor is
+    # never deleted by us).
+    token = cluster_index.claim_cluster_writer(
+        spark, clusters_path, f"{job}:{clusters_path.rstrip('/')}"
+    )
+    try:
+        # a root the gate did not see standing is (re-)probed here,
+        # under the claim: resolve CURRENT first (a serving-layout
+        # root keeps meta under the live generation, and the
+        # unresolved read would misread the standing index as fresh),
+        # refuse a torn live generation (split-brain guard), and let
+        # a build racing into the gate's gap route this run into the
+        # self-healing append arm instead of crashing on the build's
+        # meta write (the claim serializes same-clusters_path writers
+        # only — it cannot order two jobs misconfigured onto one
+        # index_path)
+        fresh_index = not standing and (
+            require_untorn_serving_root(spark, index_path, job)[1] is None
+        )
+        if fresh_index:
+            getattr(dedup_index, scheme.build)(delta, index_path, **build_kw)
+            appended = True
+        else:
+            # overlap with the standing index self-heals through the
+            # classified fallback
+            appended = _ingest_delta_with_heal(
+                delta, index_path, id_col, scheme, job, audit, append_kw
+            )
+        audit["index"] = {"built": fresh_index, "appended": appended}
+        mark("index_ingest")
+
+        if try_read_parquet(spark, f"{clusters_path}/meta") is None:
+            # empty clustering, typed like the delta's ids: every node
+            # the first merge meets is brand-new, so one merge path
+            # serves first runs and steady state alike
+            id_type = delta.schema[id_col].dataType.simpleString()
+            cluster_index.build_cluster_assignments(
+                spark.createDataFrame(
+                    [], f"node {id_type}, component {id_type}"
+                ),
+                clusters_path,
+            )
+            audit["clusters_initialized"] = True
+
+        # the probe -> merge -> auto-compact tail is the SHARED
+        # implementation (cluster_index.probe_and_merge_delta[_vec],
+        # the same code path ingest_and_update_clusters[_vec] runs)
+        stats = getattr(cluster_index, scheme.probe_merge)(
+            spark,
+            index_path,
+            clusters_path,
+            delta,
+            compact_log_threshold=compact_log_threshold,
+            writer_token=token,
+            count_pairs=True,
+            **probe_kw,
+        )
+    finally:
+        cluster_index.release_cluster_writer(
+            spark, clusters_path, owner_token=token
+        )
+    audit["pairs"] = stats.pop("pairs")
+    audit["merge"] = stats
+    mark("probe_merge")
+
+    # -- canonical keep table over keep_docs
+    if keep_score_col is None:
+        keep_docs = keep_docs.withColumn("__keep_score", default_score)
+        keep_score_col = "__keep_score"
+    keep = cluster_index.canonical_keep_table(
+        spark, clusters_path, keep_docs, id_col=id_col, score_col=keep_score_col
+    )
+    keep_row = keep.agg(
+        F.count(F.lit(1)).alias("components"),
+        F.sum("n_members").alias("docs_covered"),
+    ).collect()[0]
+    audit["keep"] = {
+        "components": keep_row["components"] or 0,
+        "docs_covered": keep_row["docs_covered"] or 0,
+    }
+    mark("keep_table")
+
+    # -- staleness-gated snapshot publish
+    snap = cluster_index.snapshot_if_stale(
+        spark,
+        clusters_path,
+        snapshot_path,
+        min_rows_behind=snapshot_min_rows_behind,
+        min_age_sec=snapshot_min_age_sec,
+    )
+    prov = cluster_index.snapshot_provenance(spark, snapshot_path)
+    audit["snapshot"] = {
+        "published": snap["published"],
+        "reason": snap["reason"],
+        "n_rows": snap["n_rows"],
+        "generation": prov["generation"],
+    }
+    mark("snapshot")
 
 
 def curate_corpus_daily(
@@ -351,42 +539,12 @@ def curate_corpus_daily(
     from pyspark.sql import functions as F
 
     from .functions.text import pii_counts, quality_rule_flags, scrub_pii
-    from .fs import try_read_parquet
-    from .operators.cluster_index import (
-        LOG_COMPACT_THRESHOLD,
-        build_cluster_assignments,
-        canonical_keep_table,
-        claim_cluster_writer,
-        probe_and_merge_delta,
-        release_cluster_writer,
-        snapshot_if_stale,
-        snapshot_provenance,
-    )
-    from .operators.dedup_index import (
-        append_gap_ids,
-        append_to_dedup_index,
-        build_dedup_index,
-    )
-    from .operators.serving import require_untorn_serving_root
+    from .operators.dedup_index import _TEXT
 
-    import time as _time
-
-    spark = docs_delta.sparkSession
-    if compact_log_threshold is None:
-        compact_log_threshold = LOG_COMPACT_THRESHOLD
     audit: dict = {}
-    _t_last = _time.perf_counter()
-
-    def _mark(stage: str) -> None:
-        # per-stage wall seconds for bench attribution (optional;
-        # ``stage_timings`` mirrors ingest_and_update_clusters')
-        nonlocal _t_last
-        now = _time.perf_counter()
-        if stage_timings is not None:
-            stage_timings[stage] = stage_timings.get(stage, 0.0) + (
-                now - _t_last
-            )
-        _t_last = now
+    # per-stage wall seconds for bench attribution (optional;
+    # ``stage_timings`` mirrors ingest_and_update_clusters')
+    _mark = _stage_clock(stage_timings)
 
     # -- stages 1+2 audit in ONE delta pass: gate flags, per-rule drop
     # counts, and PII hit counts (audited on SURVIVORS' raw text —
@@ -465,142 +623,37 @@ def curate_corpus_daily(
     # refusal, crashed merge) must not leak MEMORY_AND_DISK blocks
     # into a long-lived session, one per retry
     try:
-
-        # -- stage 3: index ingest + incremental cluster merge, under the
-        # clustering's single-writer claim for the WHOLE mutation span:
-        # the claim is taken BEFORE the index append (r11 verdict ask
-        # #6 pinned the ordering) so a concurrent run refuses here,
-        # with ZERO structures touched — not after half its mutation
-        # landed. The append's own guards would keep the index
-        # consistent either way, but serializing the span also keeps
-        # the heal arm's gap classification from reading bands that
-        # another writer is appending to mid-scan. Released in the
-        # finally on every exit, by exact token (a force-cleaned
-        # marker re-claimed by a successor is never deleted by us).
-        token = claim_cluster_writer(
-            spark, clusters_path, f"curate_corpus_daily:{clusters_path.rstrip('/')}"
-        )
-        try:
-            # resolve CURRENT first: a serving-layout root
-            # (migrate_dedup_index_to_serving) keeps meta under the
-            # live generation, and the unresolved read would misread
-            # the standing index as fresh; the shared helper also
-            # refuses a torn live generation (split-brain guard)
-            fresh_index = (
-                require_untorn_serving_root(
-                    spark, index_path, "curate_corpus_daily"
-                )[1]
-                is None
-            )
-            if fresh_index:
-                build_dedup_index(
-                    scrubbed,
-                    index_path,
-                    id_col=id_col,
-                    text_col=text_col,
-                    k_shingle=k_shingle,
-                    n_hashes=n_hashes,
-                    bands=bands,
-                    allow_short=allow_short,
-                    bucket_prefix_len=bucket_prefix_len,
-                )
-                appended = True
-            else:
-                # overlap with the standing index self-heals through
-                # the shared classified fallback (_ingest_delta_with_heal)
-                appended = _ingest_delta_with_heal(
-                    scrubbed,
-                    index_path,
-                    id_col,
-                    lambda df: append_to_dedup_index(
-                        df,
-                        index_path,
-                        text_col=text_col,
-                        allow_short=allow_short,
-                    ),
-                    lambda df: append_gap_ids(
-                        spark, index_path, df, text_col=text_col
-                    ),
-                    "curate_corpus_daily",
-                    "fsck_dedup_index",
-                    "band",
-                    audit,
-                )
-            audit["index"] = {"built": fresh_index, "appended": appended}
-            _mark("index_ingest")
-
-            if try_read_parquet(spark, f"{clusters_path}/meta") is None:
-                # empty clustering, typed like the delta's ids: every
-                # node the first merge meets is brand-new, so one merge
-                # path serves first runs and steady state alike
-                id_type = scrubbed.schema[id_col].dataType.simpleString()
-                build_cluster_assignments(
-                    spark.createDataFrame(
-                        [], f"node {id_type}, component {id_type}"
-                    ),
-                    clusters_path,
-                )
-                audit["clusters_initialized"] = True
-
-            # the probe -> merge -> auto-compact tail is the SHARED
-            # implementation (cluster_index.probe_and_merge_delta, the
-            # same code path ingest_and_update_clusters runs) — only
-            # the append side above is curation-specific
-            stats = probe_and_merge_delta(
-                spark,
-                index_path,
-                clusters_path,
-                scrubbed,
-                text_col=text_col,
-                compact_log_threshold=compact_log_threshold,
-                writer_token=token,
-                count_pairs=True,
-            )
-        finally:
-            release_cluster_writer(spark, clusters_path, owner_token=token)
-        audit["pairs"] = stats.pop("pairs")
-        audit["merge"] = stats
-        _mark("probe_merge")
-
-        # -- stage 4: canonical keep table (full corpus if given, else the
-        # scrubbed delta), scored by keep_score_col or scrubbed length
-        keep_docs = docs_full if docs_full is not None else scrubbed
-        if keep_score_col is None:
-            keep_docs = keep_docs.withColumn(
-                "__keep_score", F.length(F.col(text_col)).cast("long")
-            )
-            score = "__keep_score"
-        else:
-            score = keep_score_col
-        keep = canonical_keep_table(
-            spark, clusters_path, keep_docs, id_col=id_col, score_col=score
-        )
-        keep_row = keep.agg(
-            F.count(F.lit(1)).alias("components"),
-            F.sum("n_members").alias("docs_covered"),
-        ).collect()[0]
-        audit["keep"] = {
-            "components": keep_row["components"] or 0,
-            "docs_covered": keep_row["docs_covered"] or 0,
-        }
-        _mark("keep_table")
-
-        # -- stage 5: staleness-gated snapshot publish
-        snap = snapshot_if_stale(
-            spark,
+        _claim_through_snapshot(
+            scrubbed,
+            index_path,
             clusters_path,
             snapshot_path,
-            min_rows_behind=snapshot_min_rows_behind,
-            min_age_sec=snapshot_min_age_sec,
+            id_col,
+            _TEXT,
+            "curate_corpus_daily",
+            standing=False,
+            build_kw=dict(
+                id_col=id_col,
+                text_col=text_col,
+                k_shingle=k_shingle,
+                n_hashes=n_hashes,
+                bands=bands,
+                allow_short=allow_short,
+                bucket_prefix_len=bucket_prefix_len,
+            ),
+            append_kw=dict(text_col=text_col, allow_short=allow_short),
+            probe_kw=dict(text_col=text_col),
+            # full corpus if given, else the scrubbed delta; scored by
+            # keep_score_col or scrubbed length
+            keep_docs=docs_full if docs_full is not None else scrubbed,
+            keep_score_col=keep_score_col,
+            default_score=F.length(F.col(text_col)).cast("long"),
+            compact_log_threshold=compact_log_threshold,
+            snapshot_min_rows_behind=snapshot_min_rows_behind,
+            snapshot_min_age_sec=snapshot_min_age_sec,
+            audit=audit,
+            mark=_mark,
         )
-        prov = snapshot_provenance(spark, snapshot_path)
-        audit["snapshot"] = {
-            "published": snap["published"],
-            "reason": snap["reason"],
-            "n_rows": snap["n_rows"],
-            "generation": prov["generation"],
-        }
-        _mark("snapshot")
     finally:
         scrubbed.unpersist()
     return audit
@@ -656,48 +709,19 @@ def curate_corpus_daily_vec(
     Same operational contracts as the text job, pinned by the same
     test battery shapes: empty-after-gate deltas return a no-op audit
     (``noop_empty_delta``); overlapping deltas self-heal via
-    ``vec_append_gap_ids`` (never-landed ids appended missing-only,
-    TORN bucket sets refuse with the
-    ``fsck_vec_dedup_index(repair=True)`` recipe); a verbatim re-run
-    is a no-op; concurrent runs refuse on the writer claim with zero
-    structures touched."""
+    ``append_gap_ids`` (never-landed ids appended missing-only, TORN
+    bucket sets refuse with the ``fsck_dedup_index(repair=True)``
+    recipe); a verbatim re-run is a no-op; concurrent runs refuse on
+    the writer claim with zero structures touched."""
     from pyspark.sql import functions as F
 
-    from .fs import try_read_parquet
-    from .operators.cluster_index import (
-        LOG_COMPACT_THRESHOLD,
-        build_cluster_assignments,
-        canonical_keep_table,
-        claim_cluster_writer,
-        probe_and_merge_delta_vec,
-        release_cluster_writer,
-        require_corpus_covers_delta,
-        snapshot_if_stale,
-        snapshot_provenance,
-    )
-    from .operators.dedup_index import (
-        append_to_vec_dedup_index,
-        build_vec_dedup_index,
-        vec_append_gap_ids,
-    )
+    from .operators.cluster_index import require_corpus_covers_delta
+    from .operators.dedup_index import _VEC
     from .operators.serving import require_untorn_serving_root
 
-    import time as _time
-
     spark = vecs_delta.sparkSession
-    if compact_log_threshold is None:
-        compact_log_threshold = LOG_COMPACT_THRESHOLD
     audit: dict = {}
-    _t_last = _time.perf_counter()
-
-    def _mark(stage: str) -> None:
-        nonlocal _t_last
-        now = _time.perf_counter()
-        if stage_timings is not None:
-            stage_timings[stage] = stage_timings.get(stage, 0.0) + (
-                now - _t_last
-            )
-        _t_last = now
+    _mark = _stage_clock(stage_timings)
 
     # -- pre-gate refusal: against a STANDING index the gate must size
     # vectors by the index's recorded dim, not the caller's argument —
@@ -706,7 +730,7 @@ def curate_corpus_daily_vec(
     # stopping the unattended loop without any error (ADVICE r12).
     # Recorded dim wins; a conflicting caller dim refuses loudly here,
     # before the validity aggregation, with zero structures touched.
-    # A serving-layout root (migrate_vec_dedup_index_to_serving) keeps
+    # A serving-layout root (migrate_dedup_index_to_serving) keeps
     # meta under the live generation — resolve CURRENT first, exactly
     # as the append path does, or the gate never arms post-migration.
     # The shared helper also refuses (before any work) when the root
@@ -806,128 +830,36 @@ def curate_corpus_daily_vec(
                 gated, corpus, id_col, "curate_corpus_daily_vec"
             )
 
-        # -- stage 2: index ingest + cluster merge under the writer
-        # claim for the whole mutation span (claim before append —
-        # a concurrent run refuses with zero structures touched)
-        token = claim_cluster_writer(
-            spark,
-            clusters_path,
-            f"curate_corpus_daily_vec:{clusters_path.rstrip('/')}",
-        )
-        try:
-            # the pre-gate read answers the common case (a standing
-            # index) with no extra I/O; ONLY a fresh-looking root is
-            # re-probed here, under the claim, so a build racing into
-            # the pre-gate gap routes this run into the self-healing
-            # append arm instead of crashing on the build's meta write
-            # (the claim serializes same-clusters_path writers only —
-            # it cannot order two jobs misconfigured onto one
-            # index_path). The re-probe repeats the FULL torn-serving
-            # check, not just the meta read, so a migration tearing in
-            # that same gap refuses rather than re-opening the
-            # split-brain build path.
-            fresh_index = standing_meta is None and (
-                require_untorn_serving_root(
-                    spark, index_path, "curate_corpus_daily_vec"
-                )[1]
-                is None
-            )
-            if fresh_index:
-                build_vec_dedup_index(
-                    gated,
-                    index_path,
-                    id_col=id_col,
-                    vec_col=vec_col,
-                    n_planes=n_planes,
-                    n_tables=n_tables,
-                    dim=dim,
-                    bucket_prefix_len=bucket_prefix_len,
-                )
-                appended = True
-            else:
-                # overlap with the standing index self-heals through
-                # the shared classified fallback (_ingest_delta_with_heal)
-                appended = _ingest_delta_with_heal(
-                    gated,
-                    index_path,
-                    id_col,
-                    lambda df: append_to_vec_dedup_index(df, index_path),
-                    lambda df: vec_append_gap_ids(spark, index_path, df),
-                    "curate_corpus_daily_vec",
-                    "fsck_vec_dedup_index",
-                    "bucket",
-                    audit,
-                )
-            audit["index"] = {"built": fresh_index, "appended": appended}
-            _mark("index_ingest")
-
-            if try_read_parquet(spark, f"{clusters_path}/meta") is None:
-                id_type = gated.schema[id_col].dataType.simpleString()
-                build_cluster_assignments(
-                    spark.createDataFrame(
-                        [], f"node {id_type}, component {id_type}"
-                    ),
-                    clusters_path,
-                )
-                audit["clusters_initialized"] = True
-
-            stats = probe_and_merge_delta_vec(
-                spark,
-                index_path,
-                clusters_path,
-                gated,
-                corpus=corpus,
-                threshold=threshold,
-                compact_log_threshold=compact_log_threshold,
-                writer_token=token,
-                count_pairs=True,
-            )
-        finally:
-            release_cluster_writer(spark, clusters_path, owner_token=token)
-        audit["pairs"] = stats.pop("pairs")
-        audit["merge"] = stats
-        _mark("probe_merge")
-
-        # -- stage 3: canonical keep table (full corpus if given, else
-        # the gated delta); default score = lowest id wins
-        keep_docs = corpus if corpus is not None else gated
-        if keep_score_col is None:
-            # integral id already verified in the pre-mutation block
-            keep_docs = keep_docs.withColumn(
-                "__keep_score", -F.col(id_col).cast("long")
-            )
-            score = "__keep_score"
-        else:
-            score = keep_score_col
-        keep = canonical_keep_table(
-            spark, clusters_path, keep_docs, id_col=id_col, score_col=score
-        )
-        keep_row = keep.agg(
-            F.count(F.lit(1)).alias("components"),
-            F.sum("n_members").alias("docs_covered"),
-        ).collect()[0]
-        audit["keep"] = {
-            "components": keep_row["components"] or 0,
-            "docs_covered": keep_row["docs_covered"] or 0,
-        }
-        _mark("keep_table")
-
-        # -- stage 4: staleness-gated snapshot publish
-        snap = snapshot_if_stale(
-            spark,
+        _claim_through_snapshot(
+            gated,
+            index_path,
             clusters_path,
             snapshot_path,
-            min_rows_behind=snapshot_min_rows_behind,
-            min_age_sec=snapshot_min_age_sec,
+            id_col,
+            _VEC,
+            "curate_corpus_daily_vec",
+            standing=standing_meta is not None,
+            build_kw=dict(
+                id_col=id_col,
+                vec_col=vec_col,
+                n_planes=n_planes,
+                n_tables=n_tables,
+                dim=dim,
+                bucket_prefix_len=bucket_prefix_len,
+            ),
+            append_kw={},
+            probe_kw=dict(corpus=corpus, threshold=threshold),
+            # full corpus if given, else the gated delta; the default
+            # score (lowest id wins) had its integral id verified above
+            keep_docs=corpus if corpus is not None else gated,
+            keep_score_col=keep_score_col,
+            default_score=-F.col(id_col).cast("long"),
+            compact_log_threshold=compact_log_threshold,
+            snapshot_min_rows_behind=snapshot_min_rows_behind,
+            snapshot_min_age_sec=snapshot_min_age_sec,
+            audit=audit,
+            mark=_mark,
         )
-        prov = snapshot_provenance(spark, snapshot_path)
-        audit["snapshot"] = {
-            "published": snap["published"],
-            "reason": snap["reason"],
-            "n_rows": snap["n_rows"],
-            "generation": prov["generation"],
-        }
-        _mark("snapshot")
     finally:
         gated.unpersist()
     return audit
@@ -972,10 +904,11 @@ def fsck_curation(
     one resolved-nodes anti-join against the distinct banded ids —
     2-3 linear narrow-table passes total, scheduled-sweep shaped like
     the fscks it composes. ``vec=True`` checks an embedding-side
-    triple (``fsck_vec_dedup_index``). ``strict=True`` raises on a
-    missing structure or the cross-structure violation after the
-    per-structure fscks have passed (those raise first, under their
-    own names)."""
+    triple (the index fsck reads the kind from meta; the
+    cross-structure check loads the index as a vector one).
+    ``strict=True`` raises on a missing structure or the
+    cross-structure violation after the per-structure fscks have
+    passed (those raise first, under their own names)."""
     from pyspark.sql import functions as F
 
     from .fs import fs_list_names, fs_read_text, try_read_parquet
@@ -985,15 +918,13 @@ def fsck_curation(
         resolve_cluster_assignments,
     )
     from .operators.dedup_index import (
-        fsck_dedup_index,
-        fsck_vec_dedup_index,
+        fsck_dedup_index as fsck_index,
         load_dedup_index,
         load_vec_dedup_index,
     )
 
     from .operators.serving import GEN_RE
 
-    fsck_index = fsck_vec_dedup_index if vec else fsck_dedup_index
     load_index = load_vec_dedup_index if vec else load_dedup_index
 
     def _serving_root_absent(path: str) -> bool:

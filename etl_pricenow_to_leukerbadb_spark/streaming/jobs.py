@@ -749,18 +749,19 @@ def _stream_bucket_ingest(
     spark: SparkSession,
     src_path: str,
     index_path: str,
-    schema: str,
-    id_col: str,
-    rows_per_id: int,
-    build_id: str,
-    append,
+    params: dict,
     name: str,
-    fsck_name: str,
+    append_kw: dict,
     post_batch=None,
     transform=None,
 ) -> None:
-    """Shared streaming-ingest core for the persisted near-dup
-    indexes (text and vector frontends of ``operators/dedup_index``).
+    """The streaming-ingest body for both persisted near-dup index
+    kinds (text and vector frontends of ``operators/dedup_index``).
+    ``params`` is the index meta the public job loaded through its
+    kind's loader (an index of the other kind has already refused);
+    the micro-batch schema, the per-id row count and the repair
+    entry point named in errors come from its scheme, and each fresh
+    batch goes to the kind's append frontend with ``append_kw``.
 
     Replay safety under foreachBatch's at-least-once contract — the
     SAME two-tier scheme as the ANN ingest
@@ -772,12 +773,12 @@ def _stream_bucket_ingest(
       committed epoch is a metadata no-op.
     - **Marker-less replay**: batch ids are classified against
       ``bands/`` (range-pruned on the batch's id span) by per-id row
-      count. COMPLETE ids (``rows_per_id`` rows — a prior successful
-      append) drop; ABSENT ids append; PARTIAL ids (a crash during
-      the bands file-commit) RAISE naming the frontend's
-      ``fsck(repair=True)`` — re-appending would duplicate the
-      surviving rows and silently skipping would leave under-blocking
-      entries (missed duplicates, the worst dedup failure) forever.
+      count. COMPLETE ids (K rows — a prior successful append) drop;
+      ABSENT ids append; PARTIAL ids (a crash during the bands
+      file-commit) RAISE naming ``fsck(repair=True)`` — re-appending
+      would duplicate the surviving rows and silently skipping would
+      leave under-blocking entries (missed duplicates, the worst dedup
+      failure) forever.
 
     ``post_batch(batch_df)``, when given, runs after the append and
     BEFORE the epoch marker, with the FULL batch — not the replay-
@@ -797,147 +798,230 @@ def _stream_bucket_ingest(
     misjudge which ids already landed. A batch the transform empties
     commits its epoch marker as a no-op.
     """
+    from ..fs import try_read_parquet as _try_read_parquet
+    from ..operators import dedup_index
     from ..operators.serving import (
         claim_index_for_ingest,
         release_index_ingest_claim,
+        resolve_serving_root as _resolve_index_root,
     )
 
+    scheme = dedup_index._scheme_of(params)
+    id_col = params["id_col"]
+    rows_per_id = int(params[scheme.k_key])
+    build_id = params["build_id"]
     # checkpoint keyed to the LOGICAL index path; data/markers resolve
     # a serving-layout pointer once at job start. Single-writer
     # contract, enforced loudly from both sides (same scheme as
     # stream_index_ingest_job): exclusive `.INGEST_ACTIVE` claim held
     # for the job's lifetime, and a post-marker generation-stability
     # tripwire per batch.
-    ckpt_path = index_path.rstrip("/") + "_ingest_ckpt"
     logical_path = index_path.rstrip("/")
-    tag = f"{name}:{ckpt_path}"
-    token = claim_index_for_ingest(spark, logical_path, tag)
+    ckpt_path = logical_path + "_ingest_ckpt"
+    token = claim_index_for_ingest(spark, logical_path, f"{name}:{ckpt_path}")
     try:
-        _run_bucket_ingest(
-            spark, src_path, logical_path, ckpt_path, schema, id_col,
-            rows_per_id, build_id, append, name, fsck_name, post_batch,
-            transform,
+        resolved = _resolve_index_root(spark, logical_path)
+        markers_path = f"{resolved}/ingest_epochs"
+        qid_cache: dict[str, str] = {}
+
+        def query_id(ss: SparkSession) -> str:
+            if "id" not in qid_cache:
+                qid_cache["id"] = ss.read.json(
+                    f"{ckpt_path}/metadata"
+                ).first()["id"]
+            return qid_cache["id"]
+
+        def commit_epoch_marker(
+            ss: SparkSession, qid: str, epoch_id: int
+        ) -> None:
+            _commit_epoch_marker(
+                ss, markers_path, qid, epoch_id, build_id, logical_path,
+                resolved,
+            )
+
+        def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            ss = batch_df.sparkSession
+            qid = query_id(ss)
+            markers = _try_read_parquet(ss, markers_path)
+            if markers is not None:
+                committed = (
+                    markers.filter(
+                        (F.col("query_id") == F.lit(qid))
+                        & (F.col("epoch_id") == F.lit(int(epoch_id)))
+                        & (F.col("build_id") == F.lit(build_id))
+                    ).limit(1)
+                ).count()
+                if committed:
+                    return
+            if transform is not None:
+                # deterministic pre-stages (gate/scrub) run before
+                # replay classification so a replay sees the same
+                # transformed rows; persisted because the transformed
+                # frame feeds 5-6 actions below (emptiness, span agg,
+                # partial-classifier join, append, post_batch's probe)
+                # and re-evaluating the gate/scrub expressions per
+                # action multiplies their cost
+                batch_df = transform(batch_df).persist()
+                if batch_df.isEmpty():
+                    # an entirely-gated-out batch commits its epoch as
+                    # a no-op so a restart does not reprocess it forever
+                    batch_df.unpersist()
+                    commit_epoch_marker(ss, qid, epoch_id)
+                    return
+            try:
+                _handle_nonempty(batch_df, ss, qid, epoch_id)
+            finally:
+                if transform is not None:
+                    batch_df.unpersist()
+
+        def _handle_nonempty(
+            batch_df: DataFrame, ss: SparkSession, qid: str, epoch_id: int
+        ) -> None:
+            span = batch_df.agg(
+                F.min(F.col(id_col)).alias("lo"),
+                F.max(F.col(id_col)).alias("hi"),
+            ).collect()[0]
+            existing = (
+                ss.read.parquet(f"{resolved}/bands")
+                .filter(
+                    F.col(id_col).between(F.lit(span["lo"]), F.lit(span["hi"]))
+                )
+                .join(batch_df.select(F.col(id_col)), id_col, "left_semi")
+                .groupBy(id_col)
+                .agg(F.count(F.lit(1)).alias("n"))
+            )
+            n_partial = existing.filter(F.col("n") != F.lit(rows_per_id)).count()
+            if n_partial:
+                raise RuntimeError(
+                    f"{name}: {n_partial} id(s) in this batch have a "
+                    f"PARTIAL bucket set in {resolved}/bands — a prior "
+                    "append crashed mid-commit. Run "
+                    f"{scheme.fsck_name}(repair=True) to prune them (this "
+                    "delta then re-ingests cleanly) before resuming ingest"
+                )
+            fresh = batch_df.join(existing, id_col, "left_anti")
+            if not fresh.isEmpty():
+                # resolved per call, so a wrapper patched onto the
+                # module runs
+                getattr(dedup_index, scheme.append)(
+                    fresh, logical_path, **append_kw
+                )
+            if post_batch is not None:
+                # full batch, not `fresh`: on a replay the classifier
+                # drops ids whose buckets already landed, but the
+                # downstream step (idempotent by contract) may have
+                # crashed before running
+                post_batch(batch_df)
+            commit_epoch_marker(ss, qid, epoch_id)
+
+        q = (
+            spark.readStream.schema(scheme.stream_schema(params))
+            .parquet(src_path)
+            .writeStream.foreachBatch(handle_batch)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt_path)
+            .start()
         )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
     finally:
         release_index_ingest_claim(spark, logical_path, owner_token=token)
 
 
-def _run_bucket_ingest(
+def _stream_cluster_job(
     spark: SparkSession,
     src_path: str,
-    logical_path: str,
-    ckpt_path: str,
-    schema: str,
-    id_col: str,
-    rows_per_id: int,
-    build_id: str,
-    append,
-    name: str,
-    fsck_name: str,
-    post_batch=None,
+    index_path: str,
+    clusters_path: str,
+    params: dict,
+    job_name: str,
+    append_kw: dict,
+    query_kw: dict,
+    compact_log_threshold: int | None,
+    snapshot_path: str | None,
+    snapshot_rows_threshold: int,
+    snapshot_min_age_sec: float,
     transform=None,
 ) -> None:
-    from ..fs import try_read_parquet as _try_read_parquet
-    from ..operators.serving import resolve_serving_root as _resolve_index_root
-
-    index_path = _resolve_index_root(spark, logical_path)
-    markers_path = f"{index_path}/ingest_epochs"
-    qid_cache: dict[str, str] = {}
-
-    def query_id(ss: SparkSession) -> str:
-        if "id" not in qid_cache:
-            qid_cache["id"] = ss.read.json(f"{ckpt_path}/metadata").first()[
-                "id"
-            ]
-        return qid_cache["id"]
-
-    def commit_epoch_marker(ss: SparkSession, qid: str, epoch_id: int) -> None:
-        _commit_epoch_marker(
-            ss, markers_path, qid, epoch_id, build_id, logical_path, index_path
-        )
-
-    def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ss = batch_df.sparkSession
-        qid = query_id(ss)
-        markers = _try_read_parquet(ss, markers_path)
-        if markers is not None:
-            committed = (
-                markers.filter(
-                    (F.col("query_id") == F.lit(qid))
-                    & (F.col("epoch_id") == F.lit(int(epoch_id)))
-                    & (F.col("build_id") == F.lit(build_id))
-                ).limit(1)
-            ).count()
-            if committed:
-                return
-        if transform is not None:
-            # deterministic pre-stages (gate/scrub) run before replay
-            # classification so a replay sees the same transformed
-            # rows; persisted because the transformed frame feeds 5-6
-            # actions below (emptiness, span agg, partial-classifier
-            # join, append, post_batch's probe) and re-evaluating the
-            # gate/scrub expressions per action multiplies their cost
-            batch_df = transform(batch_df).persist()
-            if batch_df.isEmpty():
-                # an entirely-gated-out batch commits its epoch as a
-                # no-op so a restart does not reprocess it forever
-                batch_df.unpersist()
-                commit_epoch_marker(ss, qid, epoch_id)
-                return
-        try:
-            _handle_nonempty(batch_df, ss, qid, epoch_id)
-        finally:
-            if transform is not None:
-                batch_df.unpersist()
-
-    def _handle_nonempty(
-        batch_df: DataFrame, ss: SparkSession, qid: str, epoch_id: int
-    ) -> None:
-        span = batch_df.agg(
-            F.min(F.col(id_col)).alias("lo"), F.max(F.col(id_col)).alias("hi")
-        ).collect()[0]
-        existing = (
-            ss.read.parquet(f"{index_path}/bands")
-            .filter(
-                F.col(id_col).between(F.lit(span["lo"]), F.lit(span["hi"]))
-            )
-            .join(batch_df.select(F.col(id_col)), id_col, "left_semi")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        n_partial = existing.filter(F.col("n") != F.lit(rows_per_id)).count()
-        if n_partial:
-            raise RuntimeError(
-                f"{name}: {n_partial} id(s) in this batch have a PARTIAL "
-                f"bucket set in {index_path}/bands — a prior append "
-                f"crashed mid-commit. Run {fsck_name}(repair=True) to "
-                "prune them (this delta then re-ingests cleanly) before "
-                "resuming ingest"
-            )
-        fresh = batch_df.join(existing, id_col, "left_anti")
-        if not fresh.isEmpty():
-            append(fresh)
-        if post_batch is not None:
-            # full batch, not `fresh`: on a replay the classifier drops
-            # ids whose buckets already landed, but the downstream step
-            # (idempotent by contract) may have crashed before running
-            post_batch(batch_df)
-        commit_epoch_marker(ss, qid, epoch_id)
-
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(src_path)
-        .writeStream.foreachBatch(handle_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt_path)
-        .start()
+    """The streaming cluster-job body for both index kinds (semantics
+    in ``stream_dedup_cluster_job``): take the clustering's writer
+    claim, run ``_stream_bucket_ingest`` with a per-batch probe (the
+    kind's query frontend with ``query_kw``) → merge → log compaction
+    → threshold snapshot, then publish the drain tail."""
+    from ..operators import dedup_index
+    from ..operators.cluster_index import (
+        _compact_if_log_large,
+        claim_cluster_writer,
+        merge_cluster_delta,
+        release_cluster_writer,
+        snapshot_cluster_assignments,
+        snapshot_if_stale,
     )
+
+    query = dedup_index._scheme_of(params).query
+    # this job is the clustering's writer for its whole run: the
+    # exclusive `.WRITER_ACTIVE` claim makes a concurrent manual
+    # compaction (or a second stream on the same clustering) refuse
+    # loudly instead of interleaving with the per-batch marker dance —
+    # the same enforced single-writer contract the index ingests carry
+    token = claim_cluster_writer(
+        spark, clusters_path, f"{job_name}:{clusters_path.rstrip('/')}"
+    )
+    rows_since_snapshot = {"n": 0}
+
+    def _cluster(batch_df: DataFrame) -> None:
+        ss = batch_df.sparkSession
+        pairs = getattr(dedup_index, query)(
+            ss, index_path, batch_df, **query_kw
+        )
+        stats = merge_cluster_delta(
+            ss,
+            clusters_path,
+            pairs,
+            src_col="probe_id",
+            dst_col="corpus_id",
+            writer_token=token,
+        )
+        _compact_if_log_large(
+            ss, clusters_path, stats, compact_log_threshold, token
+        )
+        if snapshot_path is not None:
+            rows_since_snapshot["n"] += stats["new_nodes"]
+            if rows_since_snapshot["n"] >= snapshot_rows_threshold:
+                snapshot_cluster_assignments(
+                    ss,
+                    clusters_path,
+                    snapshot_path,
+                    min_age_sec=snapshot_min_age_sec,
+                )
+                rows_since_snapshot["n"] = 0
+
     try:
-        q.awaitTermination()
+        _stream_bucket_ingest(
+            spark,
+            src_path,
+            index_path,
+            params,
+            job_name,
+            append_kw,
+            post_batch=_cluster,
+            transform=transform,
+        )
+        if snapshot_path is not None:
+            # drain tail: whatever landed below the threshold, plus any
+            # publish debt a restarted run inherited from a crash
+            snapshot_if_stale(
+                spark,
+                clusters_path,
+                snapshot_path,
+                min_age_sec=snapshot_min_age_sec,
+            )
     finally:
-        q.stop()
+        release_cluster_writer(spark, clusters_path, owner_token=token)
 
 
 def stream_dedup_ingest_job(
@@ -958,25 +1042,16 @@ def stream_dedup_ingest_job(
     short to shingle fails loudly for triage (same poison-message
     stance as the vector job) unless ``allow_short=True`` accepts that
     shingle LSH cannot block them."""
-    from ..operators.dedup_index import (
-        append_to_dedup_index,
-        load_dedup_index,
-    )
+    from ..operators.dedup_index import load_dedup_index
 
     _, params = load_dedup_index(spark, index_path)
     _stream_bucket_ingest(
         spark,
         docs_path,
         index_path,
-        f"{params['id_col']} {params['id_type']}, {params['text_col']} string",
-        params["id_col"],
-        int(params["bands"]),
-        params["build_id"],
-        lambda fresh: append_to_dedup_index(
-            fresh, index_path, text_col=params["text_col"], allow_short=allow_short
-        ),
+        params,
         "stream_dedup_ingest_job",
-        "fsck_dedup_index",
+        dict(text_col=params["text_col"], allow_short=allow_short),
     )
 
 
@@ -1040,90 +1115,25 @@ def stream_dedup_cluster_job(
     steady state — a fast-publishing stream should lower the age gate
     (its own publishes are the only writers racing it) or raise the
     row threshold."""
-    from ..operators.cluster_index import (
-        _compact_if_log_large,
-        claim_cluster_writer,
-        merge_cluster_delta,
-        release_cluster_writer,
-        snapshot_cluster_assignments,
-        snapshot_if_stale,
-    )
-    from ..operators.dedup_index import (
-        append_to_dedup_index,
-        load_dedup_index,
-        query_dedup_candidates,
-    )
+    from ..operators.dedup_index import load_dedup_index
 
     _, params = load_dedup_index(spark, index_path)
     text_col = params["text_col"]
-
-    def _append(fresh: DataFrame) -> None:
-        append_to_dedup_index(
-            fresh, index_path, text_col=text_col, allow_short=allow_short
-        )
-
-    threshold = compact_log_threshold
-    # this job is the clustering's writer for its whole run: the
-    # exclusive `.WRITER_ACTIVE` claim makes a concurrent manual
-    # compaction (or a second stream on the same clustering) refuse
-    # loudly instead of interleaving with the per-batch marker dance —
-    # the same enforced single-writer contract the index ingests carry
-    tag = f"{job_name}:{clusters_path.rstrip('/')}"
-
-    token = claim_cluster_writer(spark, clusters_path, tag)
-    rows_since_snapshot = {"n": 0}
-
-    def _cluster(batch_df: DataFrame) -> None:
-        ss = batch_df.sparkSession
-        pairs = query_dedup_candidates(
-            ss, index_path, batch_df, text_col=text_col
-        )
-        stats = merge_cluster_delta(
-            ss,
-            clusters_path,
-            pairs,
-            src_col="probe_id",
-            dst_col="corpus_id",
-            writer_token=token,
-        )
-        _compact_if_log_large(ss, clusters_path, stats, threshold, token)
-        if snapshot_path is not None:
-            rows_since_snapshot["n"] += stats["new_nodes"]
-            if rows_since_snapshot["n"] >= snapshot_rows_threshold:
-                snapshot_cluster_assignments(
-                    ss,
-                    clusters_path,
-                    snapshot_path,
-                    min_age_sec=snapshot_min_age_sec,
-                )
-                rows_since_snapshot["n"] = 0
-
-    try:
-        _stream_bucket_ingest(
-            spark,
-            docs_path,
-            index_path,
-            f"{params['id_col']} {params['id_type']}, {text_col} string",
-            params["id_col"],
-            int(params["bands"]),
-            params["build_id"],
-            _append,
-            job_name,
-            "fsck_dedup_index",
-            post_batch=_cluster,
-            transform=transform,
-        )
-        if snapshot_path is not None:
-            # drain tail: whatever landed below the threshold, plus any
-            # publish debt a restarted run inherited from a crash
-            snapshot_if_stale(
-                spark,
-                clusters_path,
-                snapshot_path,
-                min_age_sec=snapshot_min_age_sec,
-            )
-    finally:
-        release_cluster_writer(spark, clusters_path, owner_token=token)
+    _stream_cluster_job(
+        spark,
+        docs_path,
+        index_path,
+        clusters_path,
+        params,
+        job_name,
+        dict(text_col=text_col, allow_short=allow_short),
+        dict(text_col=text_col),
+        compact_log_threshold,
+        snapshot_path,
+        snapshot_rows_threshold,
+        snapshot_min_age_sec,
+        transform,
+    )
 
 
 def stream_curation_job(
@@ -1209,24 +1219,16 @@ def stream_vec_dedup_ingest_job(
     should stop the queue for triage, not silently become an
     unblockable corpus entry. The stream schema (id type + vector
     element type) is derived from the index meta, never assumed."""
-    from ..operators.dedup_index import (
-        append_to_vec_dedup_index,
-        load_vec_dedup_index,
-    )
+    from ..operators.dedup_index import load_vec_dedup_index
 
     _, params = load_vec_dedup_index(spark, index_path)
     _stream_bucket_ingest(
         spark,
         vectors_path,
         index_path,
-        f"{params['id_col']} {params['id_type']}, "
-        f"{params['vec_col']} array<{params['vec_elem_type']}>",
-        params["id_col"],
-        int(params["n_tables"]),
-        params["build_id"],
-        lambda fresh: append_to_vec_dedup_index(fresh, index_path),
+        params,
         "stream_vec_dedup_ingest_job",
-        "fsck_vec_dedup_index",
+        {},
     )
 
 
@@ -1269,73 +1271,20 @@ def stream_vec_dedup_cluster_job(
     ``snapshot_path`` it also keeps the serving snapshot fresh off the
     accumulated merge stats and drains through ``snapshot_if_stale``,
     exactly like the text job."""
-    from ..operators.cluster_index import (
-        _compact_if_log_large,
-        claim_cluster_writer,
-        merge_cluster_delta,
-        release_cluster_writer,
-        snapshot_cluster_assignments,
-        snapshot_if_stale,
-    )
-    from ..operators.dedup_index import (
-        append_to_vec_dedup_index,
-        load_vec_dedup_index,
-        query_vec_dedup_candidates,
-    )
+    from ..operators.dedup_index import load_vec_dedup_index
 
     _, params = load_vec_dedup_index(spark, index_path)
-    threshold = compact_log_threshold
-    tag = f"stream_vec_dedup_cluster_job:{clusters_path.rstrip('/')}"
-
-    token = claim_cluster_writer(spark, clusters_path, tag)
-    rows_since_snapshot = {"n": 0}
-
-    def _cluster(batch_df: DataFrame) -> None:
-        ss = batch_df.sparkSession
-        pairs = query_vec_dedup_candidates(ss, index_path, batch_df)
-        stats = merge_cluster_delta(
-            ss,
-            clusters_path,
-            pairs,
-            src_col="probe_id",
-            dst_col="corpus_id",
-            writer_token=token,
-        )
-        _compact_if_log_large(ss, clusters_path, stats, threshold, token)
-        if snapshot_path is not None:
-            rows_since_snapshot["n"] += stats["new_nodes"]
-            if rows_since_snapshot["n"] >= snapshot_rows_threshold:
-                snapshot_cluster_assignments(
-                    ss,
-                    clusters_path,
-                    snapshot_path,
-                    min_age_sec=snapshot_min_age_sec,
-                )
-                rows_since_snapshot["n"] = 0
-
-    try:
-        _stream_bucket_ingest(
-            spark,
-            vectors_path,
-            index_path,
-            f"{params['id_col']} {params['id_type']}, "
-            f"{params['vec_col']} array<{params['vec_elem_type']}>",
-            params["id_col"],
-            int(params["n_tables"]),
-            params["build_id"],
-            lambda fresh: append_to_vec_dedup_index(fresh, index_path),
-            "stream_vec_dedup_cluster_job",
-            "fsck_vec_dedup_index",
-            post_batch=_cluster,
-        )
-        if snapshot_path is not None:
-            # drain tail + crash-inherited publish debt, like the
-            # text job
-            snapshot_if_stale(
-                spark,
-                clusters_path,
-                snapshot_path,
-                min_age_sec=snapshot_min_age_sec,
-            )
-    finally:
-        release_cluster_writer(spark, clusters_path, owner_token=token)
+    _stream_cluster_job(
+        spark,
+        vectors_path,
+        index_path,
+        clusters_path,
+        params,
+        "stream_vec_dedup_cluster_job",
+        {},
+        {},
+        compact_log_threshold,
+        snapshot_path,
+        snapshot_rows_threshold,
+        snapshot_min_age_sec,
+    )

@@ -463,6 +463,7 @@ def test_vec_append_fsck_repair_roundtrip(spark, vecs, vec_split, tmp_path):
     from etl_pricenow_to_leukerbadb_spark.operators.dedup_index import (
         append_to_vec_dedup_index,
         build_vec_dedup_index,
+        fsck_dedup_index,
         fsck_vec_dedup_index,
     )
     from etl_pricenow_to_leukerbadb_spark.session import tiny_local_df
@@ -473,6 +474,8 @@ def test_vec_append_fsck_repair_roundtrip(spark, vecs, vec_split, tmp_path):
     append_to_vec_dedup_index(delta, path)
     report = fsck_vec_dedup_index(spark, path)
     assert report["n_ids"] == vecs.count() and report["dup_rows"] == 0
+    # the unsuffixed name reads the vector kind from meta
+    assert fsck_dedup_index(spark, path) == report
     # appended index == clean rebuild over the union
     full = str(tmp_path / "vddx_full")
     build_vec_dedup_index(vecs, full, **VEC_GEOM)
@@ -576,6 +579,7 @@ def test_vec_compact_preserves_probe(spark, vecs, vec_split, tmp_path):
     clean."""
     from etl_pricenow_to_leukerbadb_spark.operators.dedup_index import (
         build_vec_dedup_index,
+        compact_dedup_index,
         compact_vec_dedup_index,
         fsck_vec_dedup_index,
         load_vec_dedup_index,
@@ -599,6 +603,11 @@ def test_vec_compact_preserves_probe(spark, vecs, vec_split, tmp_path):
     _, params = load_vec_dedup_index(spark, path)
     assert params["build_id"] == build_id
     fsck_vec_dedup_index(spark, path)
+    # the unsuffixed name reads the vector kind from meta: on the same
+    # (compacted) index it reports what the _vec name reports
+    assert compact_dedup_index(spark, path, target_files=1) == (
+        compact_vec_dedup_index(spark, path, target_files=1)
+    )
 
 
 def test_point_probe_layout_matches_flat_and_prunes(

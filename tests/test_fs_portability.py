@@ -135,9 +135,27 @@ def test_fs_text_marker_roundtrip_on_file_uri(spark, tmp_path):
     assert fs_read_text(spark, marker) is None
 
 
-def test_try_read_parquet_answers_against_path_scheme(spark, tmp_path):
+def test_try_read_parquet_answers_against_path_scheme(
+    spark, tmp_path, monkeypatch
+):
+    from pyspark.sql import DataFrameReader
+
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def counting_parquet(self, *paths, **options):
+        reads.append(paths)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+    # an absent path is answered by the filesystem alone: no read, so
+    # no failed analysis and no FileStreamSink warning behind the None
     assert try_read_parquet(spark, _uri(tmp_path, "absent")) is None
+    assert reads == []
     t = _uri(tmp_path, "present")
     spark.range(4).write.parquet(t)
     df = try_read_parquet(spark, t)
     assert df is not None and df.count() == 4
+    # an existing directory without readable parquet still reads as None
+    os.makedirs(tmp_path / "empty")
+    assert try_read_parquet(spark, _uri(tmp_path, "empty")) is None

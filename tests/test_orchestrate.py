@@ -7,6 +7,8 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+import pytest
+
 from etl_pricenow_to_leukerbadb_spark.orchestrate import (
     RunLock,
     is_due,
@@ -1137,44 +1139,64 @@ def test_curate_corpus_daily_vec_serving_layout_gate_and_append(
     )
 
 
+@pytest.mark.parametrize(
+    "index_kind, entry",
+    [
+        ("text", "curate_corpus_daily_vec"),
+        ("vec", "curate_corpus_daily"),
+        ("vec", "append_to_dedup_index"),
+        ("text", "append_to_vec_dedup_index"),
+    ],
+)
 def test_curate_corpus_daily_vec_foreign_meta_named_refusal(
-    spark, tmp_path
+    spark, sf_small, tmp_path, index_kind, entry
 ):
-    """An index_path mistakenly pointing at a TEXT dedup index (meta
-    without a 'dim' column) refuses with the job's named malformed-meta
-    error, not a bare KeyError from an unguarded row access (r13
-    review)."""
-    import pytest
+    """An index_path mistakenly pointing at an index of the OTHER kind
+    refuses with the named malformed-meta error and leaves the band
+    table as it was — not a bare KeyError from an unguarded row access
+    (r13 review), and not an append of the wrong kind: the maintenance
+    entry points read the kind from meta, so the kind-specific ones
+    must keep refusing. The handle cache is warmed first, so the
+    refusal must hold on a cache hit too."""
+    from pyspark.sql import functions as F
 
-    from etl_pricenow_to_leukerbadb_spark.operators.dedup_index import (
-        build_dedup_index,
-    )
+    from etl_pricenow_to_leukerbadb_spark.operators import dedup_index as dx
     from etl_pricenow_to_leukerbadb_spark.orchestrate import (
+        curate_corpus_daily,
         curate_corpus_daily_vec,
     )
+    from etl_pricenow_to_leukerbadb_spark.sources.tables import load_table
 
-    text_idx = str(tmp_path / "tidx")
-    docs = spark.createDataFrame(
-        [(i, f"some document body number {i} with enough words")
-         for i in range(4)],
-        "doc_id bigint, text string",
+    docs = load_table(spark, sf_small, "documents").filter(F.col("doc_id") < 40)
+    vecs = load_table(spark, sf_small, "embeddings").filter(
+        F.col("vec_id") < 40
     )
-    build_dedup_index(docs, text_idx, allow_short=True)
+    idx, cl, snap = (str(tmp_path / p) for p in ("idx", "cl", "snap"))
+    if index_kind == "text":
+        dx.build_dedup_index(docs, idx, allow_short=True)
+        dx.load_dedup_index(spark, idx)
+    else:
+        dx.build_vec_dedup_index(vecs, idx, n_planes=4, n_tables=4, dim=64)
+        dx.load_vec_dedup_index(spark, idx)
+    bands_before = spark.read.parquet(f"{idx}/bands").count()
 
-    vecs = spark.createDataFrame(
-        [(i, [float(i + j) for j in range(8)]) for i in range(4)],
-        "vec_id bigint, embedding array<float>",
-    )
+    calls = {
+        "curate_corpus_daily_vec": lambda: curate_corpus_daily_vec(
+            vecs, idx, cl, snap, n_planes=4, n_tables=4
+        ),
+        "curate_corpus_daily": lambda: curate_corpus_daily(
+            docs, idx, cl, snap
+        ),
+        "append_to_dedup_index": lambda: dx.append_to_dedup_index(
+            docs, idx, allow_short=True
+        ),
+        "append_to_vec_dedup_index": lambda: dx.append_to_vec_dedup_index(
+            vecs, idx
+        ),
+    }
     with pytest.raises(ValueError, match="malformed meta"):
-        curate_corpus_daily_vec(
-            vecs,
-            text_idx,
-            str(tmp_path / "vcl"),
-            str(tmp_path / "vsnap"),
-            dim=8,
-            n_planes=4,
-            n_tables=4,
-        )
+        calls[entry]()
+    assert spark.read.parquet(f"{idx}/bands").count() == bands_before
 
 
 def test_curate_corpus_daily_serving_layout_appends_not_rebuilds(
