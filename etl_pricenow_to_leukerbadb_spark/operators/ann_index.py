@@ -46,33 +46,30 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..fs import (
-    fs_copy,
-    fs_delete,
-    fs_list_names,
-    fs_read_text,
-    fs_rename,
-    try_read_parquet,
-)
+# Layout decisions go through Spark's filesystem (``..fs``), never
+# ``os.path``: the index lives wherever ``spark.write`` put it
+# (HDFS/S3 in production), where a driver-local check is silently
+# False and "append to both tables" would become "append to one".
+from ..fs import fs_delete, try_read_parquet
 from ..session import tiny_local_df
+# The serving core (pointer layout, claims and tripwires, GC, both
+# compactions) lives in ``serving``; the ``_``-names are re-exports the
+# tests check against it.
 from .serving import (
-    CURRENT as _CURRENT,
     GEN_RE as _GEN_RE,
-    INGEST_ACTIVE as _INGEST_ACTIVE,
     assert_generation_stable,
     assert_no_late_writers as _assert_no_late_writers,
     claim_index_for_ingest,
+    compact_generation,
+    compact_in_place,
     compact_sorted as _compact_sorted,
     fs_now_ms as _fs_now_ms,
     gc_serving_root,
     migrate_root_to_serving,
-    refuse_if_ingest_active as _refuse_if_ingest_active,
-    release_claim_if_proven_stale as _release_claim_if_proven_stale,
     release_index_ingest_claim,
     resolve_serving_root as _resolve_index_root,
-    restore_markers_if_crashed as _restore_markers_if_crashed,
     serving_root_report as _root_report,
-    swap_in_markers as _swap_in_markers,
+    swap_in_staged,
     write_commit_marker as _write_commit,
     write_current_pointer as _write_current,
 )
@@ -89,19 +86,6 @@ from .similarity import (
 )
 
 _META_COLS = ("n_subspaces", "sub_dim", "n_codes", "id_col", "vec_col")
-
-
-# Layout decisions MUST go through Spark's filesystem, never
-# ``os.path`` — the index lives wherever ``spark.write`` put it
-# (HDFS/S3 in production), and a driver-local check is silently False
-# there, which turns "append to both tables" into "append to one",
-# the exact corruption this module exists to prevent. The helpers
-# were promoted to ``..fs`` so the parquet merge sinks share them;
-# the private aliases keep this module's call sites (and its public
-# test seam) stable.
-_try_read_parquet = try_read_parquet
-_fs_delete = fs_delete
-_fs_rename = fs_rename
 
 
 def build_pq_index(
@@ -154,7 +138,7 @@ def build_pq_index(
     spark = corpus.sparkSession
     if overwrite:
         for sub in ("commit", "ivf_meta", "centroids", "lists"):
-            _fs_delete(spark, f"{path}/{sub}")
+            fs_delete(spark, f"{path}/{sub}")
     # the COLUMN TYPES ride in meta too: a streaming ingest must read
     # its delta with exactly the corpus's id / vector-element types, or
     # the appended parquet files carry a different physical type than
@@ -207,35 +191,39 @@ def build_pq_index(
     return build_id
 
 
-# The serving layout (pointer indirection for zero-downtime
-# compaction), the single-writer claim/tripwire machinery, the
-# filesystem-clock GC, and the staged sorted compaction all moved to
-# ``operators/serving.py`` — four persisted structures share them (r10
-# verdict's neutral-home ask). This module re-exports them under the
-# original names (see the import block above) so its public API and
-# test seams are unchanged; the remaining code here is the ANN-index
-# layout itself: build/load/search/append/fsck/repair/compact for
-# PQ and IVF-PQ artifacts.
+# Maintenance (migration, both compactions, the staged swap of repair)
+# runs on the shared core in ``operators/serving.py``; this module
+# supplies the PQ / IVF-PQ loader and table layout
+# (``_compaction_tables``).
+
+
+def _compaction_tables(spark: SparkSession, root: str) -> tuple:
+    """Strict load for the shared compactions: the ``build_id`` (None
+    on the legacy format, which has no commit marker) and the tables to
+    rewrite — codes by (id, subspace), plus lists by id on an IVF-PQ
+    layout — range-partitioned so each file covers a disjoint id
+    range."""
+    _, _, params = load_pq_index(spark, root)
+    id_col = params["id_col"]
+    tables = [("codes", [id_col, "subspace"], None)]
+    if try_read_parquet(spark, f"{root}/ivf_meta") is not None:
+        tables.append(("lists", [id_col], None))
+    return params.get("build_id"), tables
 
 
 def migrate_index_to_serving(
-    spark: SparkSession, path: str, _validate=None, force: bool = False
+    spark: SparkSession, path: str, force: bool = False
 ) -> str:
     """One-time, resumable migration of a flat-layout index into the
-    serving layout — ``serving.migrate_root_to_serving`` with the
-    validator defaulted to ``load_pq_index``; the dedup bucket indexes
-    pass their own loaders through their ``migrate_*`` wrappers (the
-    generation/pointer mechanics are layout-agnostic)."""
-    if _validate is None:
-        _validate = load_pq_index
-    return migrate_root_to_serving(spark, path, _validate, force=force)
+    serving layout — ``serving.migrate_root_to_serving`` validated by
+    ``load_pq_index``."""
+    return migrate_root_to_serving(spark, path, load_pq_index, force=force)
 
 
 def compact_index_serving(
     spark: SparkSession,
     path: str,
     target_files: int | None = None,
-    keep_previous: bool = True,
     force: bool = False,
 ) -> dict:
     """Reader-isolated compaction: compact a COPY of the live
@@ -244,90 +232,20 @@ def compact_index_serving(
     the swap all succeed (pytest-gated), because no file a reader can
     hold a reference to is deleted.
 
-    Same rewrite semantics as ``compact_index`` (codes id-sorted +
-    range-partitioned, lists by id, epoch markers to one file, row
-    counts verified BEFORE the pointer moves); the small artifacts
-    (meta/codebook/centroids/ivf_meta) are byte-copied. The new
-    generation's commit marker is written LAST within the generation,
-    and the pointer swap happens only after it — a crash anywhere
-    leaves ``CURRENT`` on the old, fully-intact generation, and the
-    orphaned partial generation is swept by the next successful run's
-    cleanup.
-
-    ``keep_previous=True`` (default) retains the superseded generation
-    until the NEXT compaction, giving in-flight readers a full
-    compaction interval to finish — the doubled storage is the rent
-    for zero-downtime (SCALE.md). Generations older than that are
-    deleted here. Single-writer per index, and not concurrent with a
-    streaming ingest (whose appends would land in the generation it
-    resolved at job start) — ingest claims are refused unless
-    ``force=True`` bypasses (hard-killed-job recovery: the bypassed
-    claim is released at the END of the run, once the pre-swap
-    file-count check has proven it wrote nothing — a live claim the
-    operator misjudged as stale keeps its exclusivity and aborts the
-    swap the moment it writes)."""
-    p = path.rstrip("/")
-    entry_claim = _refuse_if_ingest_active(
-        spark, p, "compact_index_serving", force
+    Same rewrite as ``compact_index`` (codes, lists and epoch markers,
+    row counts verified BEFORE the pointer moves); the small artifacts
+    (meta/codebook/centroids/ivf_meta) are byte-copied and the commit
+    marker completes the generation. Mechanics, crash contract and the
+    one-generation reader grace: ``serving.compact_generation``.
+    Single-writer per index, and not concurrent with a streaming
+    ingest — ingest claims are refused unless ``force=True`` bypasses
+    (hard-killed-job recovery: the bypassed claim is released at the
+    END of the run, once the pre-swap file-count check has proven it
+    wrote nothing)."""
+    return compact_generation(
+        spark, path, "compact_index_serving", _compaction_tables,
+        target_files, force,
     )
-    cur_name = fs_read_text(spark, f"{p}/{_CURRENT}")
-    if cur_name is None:
-        raise ValueError(
-            f"index at {path} is in the flat layout — run "
-            "migrate_index_to_serving() once, or use compact_index() "
-            "in a maintenance window"
-        )
-    cur_name = cur_name.strip()
-    cur = f"{p}/{cur_name}"
-    _, _, params = load_pq_index(spark, cur)  # validates marker + geometry
-    id_col = params["id_col"]
-    new_name = f"gen-{uuid.uuid4().hex[:12]}"
-    new = f"{p}/{new_name}"
-
-    report: dict = {}
-    children = fs_list_names(spark, cur)
-    rows, fb, fa = _compact_sorted(
-        spark, f"{cur}/codes", f"{new}/codes", [id_col, "subspace"], target_files
-    )
-    report["codes"] = {"rows": rows, "files_before": fb, "files_after": fa}
-    if "lists" in children and "ivf_meta" in children:
-        rows, fb, fa = _compact_sorted(
-            spark, f"{cur}/lists", f"{new}/lists", [id_col], target_files
-        )
-        report["lists"] = {"rows": rows, "files_before": fb, "files_after": fa}
-    if "ingest_epochs" in children:
-        rows, fb, fa = _compact_sorted(
-            spark,
-            f"{cur}/ingest_epochs",
-            f"{new}/ingest_epochs",
-            ["query_id", "epoch_id"],
-            1,
-        )
-        report["ingest_epochs"] = {
-            "rows": rows,
-            "files_before": fb,
-            "files_after": fa,
-        }
-    for n in children:
-        if n in ("codes", "lists", "ingest_epochs", "commit") or n.startswith("."):
-            continue
-        fs_copy(spark, f"{cur}/{n}", f"{new}/{n}")
-    if "build_id" in params:
-        _write_commit(spark, new, params["build_id"])  # completes the gen
-    _assert_no_late_writers(
-        spark, cur, report, "compact_index_serving", entry_claim
-    )
-    _write_current(spark, p, new_name)
-    keep = {new_name} | ({cur_name} if keep_previous else set())
-    for n in fs_list_names(spark, p):
-        if _GEN_RE.match(n) and n not in keep:
-            fs_delete(spark, f"{p}/{n}")
-    # the run just PROVED the bypassed claim wrote nothing for its
-    # whole duration — release the corpse so the next ingest can claim
-    if _release_claim_if_proven_stale(spark, p, entry_claim):
-        report["stale_claim_released"] = entry_claim
-    report["generation"] = {"previous": cur_name, "current": new_name}
-    return report
 
 
 # Per-process handle cache: the small immutable-within-a-generation
@@ -393,7 +311,7 @@ def load_pq_index(
     key = _cache_key(spark, path)
     if use_cache and key in _HANDLE_CACHE:
         cached = _HANDLE_CACHE[key]
-        commit = _try_read_parquet(spark, f"{path}/commit")
+        commit = try_read_parquet(spark, f"{path}/commit")
         rows = commit.collect() if commit is not None else []
         if len(rows) == 1 and rows[0]["build_id"] == cached["build_id"]:
             codes = spark.read.parquet(f"{path}/codes")
@@ -404,7 +322,7 @@ def load_pq_index(
         raise ValueError(f"load_pq_index: malformed meta at {path}/meta")
     params = meta_rows[0].asDict()
     if "build_id" in params:
-        commit = _try_read_parquet(spark, f"{path}/commit")
+        commit = try_read_parquet(spark, f"{path}/commit")
         commit_rows = commit.collect() if commit is not None else []
         if len(commit_rows) != 1 or commit_rows[0]["build_id"] != params.get(
             "build_id"
@@ -609,10 +527,10 @@ def append_to_pq_index(
     # inverted lists: search_ivfpq_index inner-joins codes to lists, so
     # codes-only appends would be silently invisible to IVFADC search
     # (while plain PQ search over the same path saw them). Layout
-    # detection goes through Spark's filesystem (_try_read_parquet) —
+    # detection goes through Spark's filesystem (try_read_parquet) —
     # an os.path probe is driver-local and silently False on HDFS/S3,
     # which would reintroduce exactly that corruption one layer up.
-    ivf_meta = _try_read_parquet(spark, f"{path}/ivf_meta")
+    ivf_meta = try_read_parquet(spark, f"{path}/ivf_meta")
     if ivf_meta is not None:
         # lists BEFORE codes: the two appends cannot be atomic across
         # directories, and this order makes the crash window benign —
@@ -631,7 +549,7 @@ def append_to_pq_index(
         # disjointness semi-join is skipped.
         n_centroids = ivf_meta.collect()[0]["n_centroids"]
         centroids = spark.read.parquet(f"{path}/centroids")
-        lists_now = _try_read_parquet(spark, f"{path}/lists")
+        lists_now = try_read_parquet(spark, f"{path}/lists")
         # assign the FULL delta against the frozen coarse quantizer
         # once: the lists append below filters it, and a residual
         # layout also needs the assignment for ids anti-joined OUT of
@@ -794,7 +712,7 @@ def fsck_index(
         "partial_code_ids": cstats["bad"],
         **root_report,
     }
-    if _try_read_parquet(spark, f"{path}/ivf_meta") is not None:
+    if try_read_parquet(spark, f"{path}/ivf_meta") is not None:
         lstats = (
             spark.read.parquet(f"{path}/lists")
             .agg(
@@ -851,9 +769,9 @@ def repair_index(spark: SparkSession, path: str) -> dict:
     Crash safety mirrors the build path: the rewritten tables land in
     a hidden ``.repair/`` staging dir first, the commit marker is
     removed BEFORE the swap and re-written (same ``build_id`` — repair
-    is not a new generation) only after it, so a crash mid-swap reads
-    as "incomplete index" at the next load, never as a silently
-    half-repaired one. Single-writer per index is the caller's
+    is not a new generation) only after it (``serving.swap_in_staged``),
+    so a crash mid-swap reads as "incomplete index" at the next load,
+    never as a silently half-repaired one. Single-writer per index is the caller's
     contract, as with overwrite builds. (Repair itself loads through
     the strict marker check — repairing an UNcommitted index could
     "repair" mixed-generation artifacts into a coherent-looking lie —
@@ -882,7 +800,7 @@ def repair_index(spark: SparkSession, path: str) -> dict:
     id_col = params["id_col"]
     n_sub = int(params["n_subspaces"])
     staging = f"{path}/.repair"
-    _fs_delete(spark, staging)  # stale from a prior crashed repair
+    fs_delete(spark, staging)  # stale from a prior crashed repair
 
     codes = codes.select(id_col, "subspace", "code").distinct()
     complete = (
@@ -891,7 +809,7 @@ def repair_index(spark: SparkSession, path: str) -> dict:
         .filter(F.col("n") == F.lit(n_sub))
         .select(id_col)
     )
-    ivfadc = _try_read_parquet(spark, f"{path}/ivf_meta") is not None
+    ivfadc = try_read_parquet(spark, f"{path}/ivf_meta") is not None
     if ivfadc:
         lists = (
             spark.read.parquet(f"{path}/lists")
@@ -906,18 +824,11 @@ def repair_index(spark: SparkSession, path: str) -> dict:
     if ivfadc:
         lists.join(keep, id_col, "left_semi").write.parquet(f"{staging}/lists")
     n_after = spark.read.parquet(f"{staging}/codes").select(id_col).distinct().count()
-
-    # the dark window: no commit marker -> any load fails loudly
-    if "build_id" in params:
-        _fs_delete(spark, f"{path}/commit")
-    _fs_delete(spark, f"{path}/codes")
-    _fs_rename(spark, f"{staging}/codes", f"{path}/codes")
-    if ivfadc:
-        _fs_delete(spark, f"{path}/lists")
-        _fs_rename(spark, f"{staging}/lists", f"{path}/lists")
-    _fs_delete(spark, staging)
-    if "build_id" in params:
-        _write_commit(spark, path, params["build_id"])
+    swap_in_staged(
+        spark, path, staging, ["codes", "lists"] if ivfadc else ["codes"],
+        params.get("build_id"),
+    )
+    fs_delete(spark, staging)
     return {
         "pruned_ids": n_before - n_after,
         "n_ids_before": n_before,
@@ -947,14 +858,10 @@ def compact_index(
     prune everything" property, restored by maintenance even when the
     ingest ids arrived shuffled.
 
-    Crash safety is ``repair_index``'s dance: staged rewrite under a
-    hidden dir, row-count invariant checked BEFORE the swap, commit
-    marker deleted first and re-written (same ``build_id`` — compaction
-    is not a new generation) only after both directories swapped, so a
-    crash anywhere reads as "incomplete index" loudly. The marker
-    table is compacted LAST and outside the dark window: it has no
-    commit protection, but losing markers is benign (replay falls back
-    to the classification guard) while losing codes would not be.
+    Crash safety and ordering: ``serving.compact_in_place`` — staged
+    rewrite, row counts checked BEFORE the swap, the commit marker
+    deleted first and re-written with the same ``build_id`` after the
+    swap, the epoch markers compacted last, outside the dark window.
     Single-writer per index is the caller's contract; do not run
     concurrently with an ingest job on the same path. Readers are not
     isolated either: a search PLANNED before the swap reads file paths
@@ -967,68 +874,9 @@ def compact_index(
 
     Returns ``{"codes": {...}, "lists": {...}, "ingest_epochs":
     {...}}`` with rows / files_before / files_after per directory."""
-    entry_claim = _refuse_if_ingest_active(spark, path, "compact_index", force)
-    logical_root = path  # where the ingest claim lives, pre-resolution
-    path = _resolve_index_root(spark, path)  # in-place compact of the live gen
-    _, _, params = load_pq_index(spark, path)  # strict: marker must match
-    id_col = params["id_col"]
-    _restore_markers_if_crashed(spark, path)
-    staging = f"{path}/.compact_stage"
-    _fs_delete(spark, staging)  # stale from a prior crashed compaction
-
-    report: dict = {}
-    rows, fb, fa = _compact_sorted(
-        spark, f"{path}/codes", f"{staging}/codes", [id_col, "subspace"], target_files
+    return compact_in_place(
+        spark, path, "compact_index", _compaction_tables, target_files, force
     )
-    report["codes"] = {"rows": rows, "files_before": fb, "files_after": fa}
-    ivfadc = _try_read_parquet(spark, f"{path}/ivf_meta") is not None
-    if ivfadc:
-        rows, fb, fa = _compact_sorted(
-            spark, f"{path}/lists", f"{staging}/lists", [id_col], target_files
-        )
-        report["lists"] = {"rows": rows, "files_before": fb, "files_after": fa}
-
-    # Pre-swap tripwire (the serving variants' guard, ported): a
-    # forced run past a claim the operator misjudged as stale must
-    # still ABORT if that ingest was actually alive — re-check the
-    # claim and re-count the snapshot's source files; any delta means
-    # committed batches the in-place swap below would sweep.
-    # assert_generation_stable is a no-op on a flat layout (the root
-    # resolves to itself), so this check is the only late-writer
-    # defense the in-place path has.
-    _assert_no_late_writers(
-        spark, path, report, "compact_index", entry_claim,
-        marker_root=logical_root,
-    )
-
-    # the dark window: no commit marker -> any load fails loudly
-    if "build_id" in params:
-        _fs_delete(spark, f"{path}/commit")
-    _fs_delete(spark, f"{path}/codes")
-    _fs_rename(spark, f"{staging}/codes", f"{path}/codes")
-    if ivfadc:
-        _fs_delete(spark, f"{path}/lists")
-        _fs_rename(spark, f"{staging}/lists", f"{path}/lists")
-    if "build_id" in params:
-        _write_commit(spark, path, params["build_id"])
-
-    markers = _try_read_parquet(spark, f"{path}/ingest_epochs")
-    if markers is not None:
-        rows, fb, fa = _compact_sorted(
-            spark,
-            f"{path}/ingest_epochs",
-            f"{staging}/ingest_epochs",
-            ["query_id", "epoch_id"],
-            1,
-        )
-        _swap_in_markers(spark, path, f"{staging}/ingest_epochs")
-        report["ingest_epochs"] = {
-            "rows": rows,
-            "files_before": fb,
-            "files_after": fa,
-        }
-    _fs_delete(spark, staging)
-    return report
 
 
 def build_ivfpq_index(
@@ -1106,7 +954,7 @@ def build_ivfpq_index(
                 "commit", "meta", "codebook", "codes",
                 "ivf_meta", "centroids", "lists",
             ):
-                _fs_delete(spark, f"{path}/{sub}")
+                fs_delete(spark, f"{path}/{sub}")
         mode = "errorifexists"
         tiny_local_df(spark, [(n_centroids,)], "n_centroids int").coalesce(
             1

@@ -394,6 +394,14 @@ def connected_components(
     chains are the norm — it is pytest-verified to produce identical
     labels.
 
+    Why both variants stay: on small graphs this one is the faster.
+    Measured on a warm ``local[4]`` session (4 vCPUs), median of 5
+    alternating runs, identical labels: sf0.001's 30 LSH candidate
+    pairs took 0.91 s here against 2.67 s two-phase, and a 5-edge
+    chain 1.8 s against 3.4 s. Two-phase bounds the round count on
+    long chains, where this one needs one round per hop
+    (``test_twophase_cc_matches_minlabel_and_handles_long_chains``).
+
     ``reliable_checkpoints=True`` writes each round to the session's
     checkpoint directory instead of executor-local blocks — see
     ``iter_checkpoint`` for the cluster-scale trade.

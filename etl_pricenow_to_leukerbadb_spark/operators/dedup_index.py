@@ -26,8 +26,9 @@ frontends over one persisted shape:
 Maintenance exists ONCE for both kinds: ``fsck_dedup_index``,
 ``compact_dedup_index``, ``compact_dedup_index_serving``,
 ``migrate_dedup_index_to_serving`` and ``append_gap_ids`` read the
-index kind from its meta (``_scheme_of``). The ``_vec`` spellings of
-those five names are aliases of the same functions.
+index kind from its meta (``_scheme_of``). The compactions and the
+repair's staged swap run on the core in ``serving``, shared with the
+ANN index; this module supplies the loader and the band-table layout.
 
 Both persist the same layout under ``path/``:
 
@@ -85,12 +86,16 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..session import tiny_local_df
 from ..sources.tables import fan_out
-from ..fs import (
-    fs_delete as _fs_delete,
-    fs_rename as _fs_rename,
-    try_read_parquet as _try_read_parquet,
+from ..fs import fs_delete as _fs_delete, try_read_parquet as _try_read_parquet
+from .serving import (
+    compact_generation,
+    compact_in_place,
+    migrate_root_to_serving,
+    resolve_serving_root as _resolve_index_root,
+    serving_root_report,
+    swap_in_staged,
+    write_commit_marker,
 )
-from .serving import resolve_serving_root as _resolve_index_root
 from .dedup import band_table, minhash_signatures
 
 
@@ -106,7 +111,6 @@ class _Scheme:
     meta_cols: tuple[str, ...]
     k_key: str  # meta key of the exact per-id bands/ row count
     rows_noun: str  # what one bands/ row is, in error messages
-    fsck_name: str  # the repair entry point error messages name
     stream_schema: Callable[[dict], str]  # micro-batch DDL from meta
     # expected_ids(delta, params, text_col): the delta ids that must
     # end up fully banded (the gap-classification population)
@@ -124,7 +128,6 @@ _TEXT = _Scheme(
     ),
     k_key="bands",
     rows_noun="band",
-    fsck_name="fsck_dedup_index",
     stream_schema=lambda p: (
         f"{p['id_col']} {p['id_type']}, {p['text_col']} string"
     ),
@@ -145,7 +148,6 @@ _VEC = _Scheme(
     ),
     k_key="n_tables",
     rows_noun="bucket",
-    fsck_name="fsck_vec_dedup_index",
     stream_schema=lambda p: (
         f"{p['id_col']} {p['id_type']}, "
         f"{p['vec_col']} array<{p['vec_elem_type']}>"
@@ -181,6 +183,20 @@ def _bp(prefix_len: int):
     breaking the string equi-filter against the probe's computed
     prefixes."""
     return F.concat(F.lit("p"), F.substring(F.col("bucket"), 1, prefix_len))
+
+
+def _write_bands(
+    df: DataFrame, dest: str, prefix_len: int, mode: str = "errorifexists"
+) -> None:
+    """Write (id, band, bucket) rows to ``dest`` in the index's layout:
+    flat, or hive-partitioned on the bucket-prefix key when
+    ``prefix_len > 0`` (the point-probe layout)."""
+    if prefix_len:
+        df.withColumn("bp", _bp(prefix_len)).write.mode(mode).partitionBy(
+            "bp"
+        ).parquet(dest)
+    else:
+        df.write.mode(mode).parquet(dest)
 
 
 def _write_bucket_index(
@@ -222,17 +238,8 @@ def _write_bucket_index(
     tiny_local_df(spark, [meta_row], meta_schema).coalesce(1).write.mode(
         mode
     ).parquet(f"{path}/meta")
-    writer = bucket_df.write.mode(mode)
-    if bucket_prefix_len:
-        writer = (
-            bucket_df.withColumn("bp", _bp(bucket_prefix_len))
-            .write.mode(mode)
-            .partitionBy("bp")
-        )
-    writer.parquet(f"{path}/bands")
-    tiny_local_df(spark, [(build_id,)], "build_id string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/commit")
+    _write_bands(bucket_df, f"{path}/bands", bucket_prefix_len, mode)
+    write_commit_marker(spark, path, build_id)
 
 
 # Per-process handle cache, mirroring ann_index._HANDLE_CACHE: meta
@@ -389,9 +396,7 @@ def fsck_dedup_index(
     narrow-table rewrite, no re-hashing. Serving-layout roots also get
     the report-only root observations (orphaned generations, ingest
     claim) — see ``serving.serving_root_report``."""
-    from .serving import serving_root_report as _root_report
-
-    root_report = _root_report(spark, path)
+    root_report = serving_root_report(spark, path)
     path = _resolve_index_root(spark, path)
     bands_df, params = _load_bucket_index(spark, path, "fsck_dedup_index")
     scheme = _scheme_of(params)
@@ -431,27 +436,20 @@ def fsck_dedup_index(
         )
         staging = f"{path}/.repair"
         _fs_delete(spark, staging)
-        repaired = distinct.join(keep, id_col, "left_semi")
-        plen = params.get("bucket_prefix_len") or 0
-        if plen:  # preserve the point-probe layout across the rewrite
-            repaired.withColumn("bp", _bp(plen)).write.partitionBy(
-                "bp"
-            ).parquet(f"{staging}/bands")
-        else:
-            repaired.write.parquet(f"{staging}/bands")
+        # the rewrite keeps the index's (point-probe) layout
+        _write_bands(
+            distinct.join(keep, id_col, "left_semi"),
+            f"{staging}/bands",
+            params.get("bucket_prefix_len") or 0,
+        )
         n_after = (
             spark.read.parquet(f"{staging}/bands")
             .select(id_col)
             .distinct()
             .count()
         )
-        _fs_delete(spark, f"{path}/commit")  # dark window: loads fail loudly
-        _fs_delete(spark, f"{path}/bands")
-        _fs_rename(spark, f"{staging}/bands", f"{path}/bands")
+        swap_in_staged(spark, path, staging, ["bands"], params["build_id"])
         _fs_delete(spark, staging)
-        tiny_local_df(
-            spark, [(params["build_id"],)], "build_id string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/commit")
         report["repair"] = {
             "pruned_ids": report["n_ids"] - n_after,
             "n_ids_after": n_after,
@@ -461,14 +459,29 @@ def fsck_dedup_index(
         )
         return report
     if strict and violations:
-        name = scheme.fsck_name
         raise RuntimeError(
-            f"{name}: index at {path} is inconsistent — {report}. A "
-            "prior append crashed mid-commit or was double-applied. Run "
-            f"{name}(repair=True) to prune (cheap: one narrow-table "
-            "rewrite, no re-hashing), then re-ingest any pruned ids"
+            f"fsck_dedup_index: index at {path} is inconsistent — "
+            f"{report}. A prior append crashed mid-commit or was "
+            "double-applied. Run fsck_dedup_index(repair=True) to prune "
+            "(cheap: one narrow-table rewrite, no re-hashing), then "
+            "re-ingest any pruned ids"
         )
     return report
+
+
+def _compaction_tables(name: str):
+    """The shared compactions' strict loader, erroring as ``name``:
+    returns the ``build_id`` and the band table to rewrite, sorted by
+    (id, band) and kept hive-partitioned on ``bp`` in the point-probe
+    layout."""
+
+    def load(spark: SparkSession, root: str) -> tuple:
+        _, params = _load_bucket_index(spark, root, name)
+        plen = params.get("bucket_prefix_len") or 0
+        bands = ("bands", [params["id_col"], "band"], "bp" if plen else None)
+        return params["build_id"], [bands]
+
+    return load
 
 
 def compact_dedup_index(
@@ -489,70 +502,12 @@ def compact_dedup_index(
     ``build_id``) after — a crash anywhere reads as "incomplete
     index". Markers are compacted last, outside the dark window
     (losing markers is benign: replay falls back to classification).
-    Single-writer per index is the caller's contract."""
-    from .serving import (
-        assert_no_late_writers as _assert_no_late_writers,
-        compact_sorted as _compact_sorted,
-        refuse_if_ingest_active as _refuse_if_ingest_active,
-        restore_markers_if_crashed as _restore_markers_if_crashed,
-        swap_in_markers as _swap_in_markers,
+    Mechanics: ``serving.compact_in_place``. Single-writer per index is
+    the caller's contract."""
+    name = "compact_dedup_index"
+    return compact_in_place(
+        spark, path, name, _compaction_tables(name), target_files, force
     )
-
-    entry_claim = _refuse_if_ingest_active(
-        spark, path, "compact_bucket_index", force
-    )
-    logical_root = path  # where the ingest claim lives, pre-resolution
-    path = _resolve_index_root(spark, path)  # in-place compact of the live gen
-    # strict: marker must match
-    _, params = _load_bucket_index(spark, path, "compact_dedup_index")
-    id_col = params["id_col"]
-    plen = params.get("bucket_prefix_len") or 0
-    _restore_markers_if_crashed(spark, path)
-    staging = f"{path}/.compact_stage"
-    _fs_delete(spark, staging)
-
-    rows, fb, fa = _compact_sorted(
-        spark,
-        f"{path}/bands",
-        f"{staging}/bands",
-        [id_col, "band"],
-        target_files,
-        partition_col="bp" if plen else None,
-    )
-    report = {"bands": {"rows": rows, "files_before": fb, "files_after": fa}}
-    # Pre-swap tripwire (same as ann_index.compact_index): a forced
-    # run past a misjudged claim must still abort if that ingest was
-    # actually alive — re-check the claim and re-count the snapshot's
-    # files before sweeping; the flat layout has no other late-writer
-    # defense (assert_generation_stable is a no-op there).
-    _assert_no_late_writers(
-        spark, path, report, "compact_bucket_index", entry_claim,
-        marker_root=logical_root,
-    )
-    _fs_delete(spark, f"{path}/commit")
-    _fs_delete(spark, f"{path}/bands")
-    _fs_rename(spark, f"{staging}/bands", f"{path}/bands")
-    tiny_local_df(
-        spark, [(params["build_id"],)], "build_id string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/commit")
-
-    markers = _try_read_parquet(spark, f"{path}/ingest_epochs")
-    if markers is not None:
-        rows, fb, fa = _compact_sorted(
-            spark,
-            f"{path}/ingest_epochs",
-            f"{staging}/ingest_epochs",
-            ["query_id", "epoch_id"],
-            1,
-        )
-        _swap_in_markers(spark, path, f"{staging}/ingest_epochs")
-        report["ingest_epochs"] = {
-            "rows": rows,
-            "files_before": fb,
-            "files_after": fa,
-        }
-    _fs_delete(spark, staging)
-    return report
 
 
 def _delta_stats(delta: DataFrame, id_col: str, extra: list | None = None):
@@ -614,77 +569,6 @@ def _guard_append_delta(
             "first, append once"
         )
     return True
-
-
-def _append_buckets(buckets: DataFrame, path: str, params: dict) -> None:
-    """Append a delta's (id, band, bucket) rows to ``bands/`` in the
-    index's layout (flat, or hive-partitioned on the bucket prefix)."""
-    plen = params.get("bucket_prefix_len") or 0
-    if plen:
-        buckets = buckets.withColumn("bp", _bp(plen))
-    writer = buckets.write.mode("append")
-    (writer.partitionBy("bp") if plen else writer).parquet(f"{path}/bands")
-
-
-def verify_append_complete(
-    spark: SparkSession,
-    path: str,
-    docs_delta: DataFrame,
-    text_col: str = "text",
-) -> dict:
-    """Did an earlier ``append_to_dedup_index`` of this EXACT delta
-    land completely? The replay question a caller faces after
-    ``_guard_append_delta`` refused a re-append: "already exists" on
-    ANY overlap, but a crashed append can land only SOME ids — or
-    only some of an id's band rows — and replaying a probe over that
-    state under-blocks forever.
-
-    The completeness invariant lives here, next to the append that
-    creates it: every SHINGLABLE delta doc (produces a minhash
-    signature — docs with fewer than ``k_shingle`` tokens produce
-    none, the ``allow_short=True`` case, and legitimately have zero
-    band rows) carries exactly ``bands`` rows in ``bands/``, one per
-    band by ``band_table``'s construction. The corpus-side scan is
-    range-pruned to the delta's id span, same as the append guard.
-
-    Returns ``{"n_delta", "n_expected", "n_complete", "complete"}``
-    — ``complete`` is True when every expected id is fully banded
-    (a delta of only unshinglable docs is vacuously complete)."""
-    path = _resolve_index_root(spark, path)
-    bands_df, params = load_dedup_index(spark, path)
-    id_col = params["id_col"]
-    expected = minhash_signatures(
-        docs_delta, id_col, text_col, params["k_shingle"], params["n_hashes"]
-    ).select(id_col)
-    estats = docs_delta.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.col(id_col)).alias("lo"),
-        F.max(F.col(id_col)).alias("hi"),
-    ).collect()[0]
-    n_expected = expected.count()
-    if estats["n"] == 0 or n_expected == 0:
-        return {
-            "n_delta": int(estats["n"]),
-            "n_expected": 0,
-            "n_complete": 0,
-            "complete": True,
-        }
-    n_complete = (
-        bands_df.filter(
-            F.col(id_col).between(F.lit(estats["lo"]), F.lit(estats["hi"]))
-        )
-        .join(expected, id_col, "left_semi")
-        .groupBy(id_col)
-        .count()
-        .filter(F.col("count") == int(params["bands"]))
-        .count()
-    )
-    return {
-        "n_delta": int(estats["n"]),
-        "n_expected": int(n_expected),
-        "n_complete": int(n_complete),
-        "complete": n_complete == n_expected,
-    }
 
 
 def append_gap_ids(
@@ -949,10 +833,11 @@ def append_to_dedup_index(
         bands_df, docs_delta, id_col, path, "append_to_dedup_index", dstats
     ):
         return
-    _append_buckets(
+    _write_bands(
         band_table(sigs, id_col, params["n_hashes"], params["bands"]),
-        path,
-        params,
+        f"{path}/bands",
+        params.get("bucket_prefix_len") or 0,
+        "append",
     )
 
 
@@ -1165,13 +1050,10 @@ def query_vec_dedup_candidates(
 
 
 # ---------------------------------------------------------------------------
-# Serving layout (pointer indirection), shared with the ANN index:
-# the generation/pointer mechanics live in serving.py (resolve_serving_
-# root / migrate_root_to_serving / write_current_pointer) and are layout-
-# agnostic; the functions below plug in the bucket loader and the
-# band-table compaction so a DEDUP gate can also be compacted with
-# zero reader downtime (probes planned before/during/after the pointer
-# swap all succeed — same contract, same tests' shape).
+# Serving layout (pointer indirection), shared with the ANN index: the
+# migration and the generation compaction are ``serving``'s, so a dedup
+# gate is also compacted with zero reader downtime (probes planned
+# before/during/after the pointer swap all succeed).
 # ---------------------------------------------------------------------------
 
 
@@ -1180,8 +1062,6 @@ def migrate_dedup_index_to_serving(
 ) -> str:
     """One-time flat -> serving migration of a text or vector near-dup
     index; mechanics in ``serving.migrate_root_to_serving``."""
-    from .serving import migrate_root_to_serving
-
     return migrate_root_to_serving(
         spark,
         path,
@@ -1199,83 +1079,15 @@ def compact_dedup_index_serving(
     force: bool = False,
 ) -> dict:
     """Zero-downtime compaction of a text or vector near-dup index
-    (reader-isolated): compact a COPY of the live generation's band
-    table into a new ``gen-<id>/``, byte-copy the small artifacts, write the new generation's commit marker
-    LAST, swap the ``CURRENT`` pointer, and keep the superseded
-    generation for one compaction interval (in-flight probe grace) —
-    the dedup analog of ``ann_index.compact_index_serving``, same
-    crash contract (a crash before the pointer swap leaves the old
-    generation live and the partial one orphaned for the next run's
-    sweep)."""
-    from ..fs import fs_copy, fs_list_names, fs_read_text
-    from .serving import (
-        CURRENT as _CURRENT,
-        GEN_RE as _GEN_RE,
-        assert_no_late_writers as _assert_no_late_writers,
-        compact_sorted as _compact_sorted,
-        refuse_if_ingest_active as _refuse_if_ingest_active,
-        release_claim_if_proven_stale as _release_claim_if_proven_stale,
-        write_commit_marker as _write_commit,
-        write_current_pointer as _write_current,
-    )
-
+    (reader-isolated): the band table and epoch markers are compacted
+    into a new ``gen-<id>/``, the small artifacts byte-copied, the
+    commit marker written LAST, then the ``CURRENT`` pointer swapped —
+    the dedup analog of ``ann_index.compact_index_serving``, same crash
+    contract (``serving.compact_generation``)."""
     name = "compact_dedup_index_serving"
-    p = path.rstrip("/")
-    entry_claim = _refuse_if_ingest_active(spark, p, name, force)
-    cur_name = fs_read_text(spark, f"{p}/{_CURRENT}")
-    if cur_name is None:
-        raise ValueError(
-            f"{name}: index at {path} is in the flat layout — run the "
-            "migrate_*_to_serving() wrapper once, or use the in-place "
-            "compaction in a maintenance window"
-        )
-    cur_name = cur_name.strip()
-    cur = f"{p}/{cur_name}"
-    _, params = _load_bucket_index(spark, cur, name)
-    id_col = params["id_col"]
-    plen = params.get("bucket_prefix_len") or 0
-    new_name = f"gen-{uuid.uuid4().hex[:12]}"
-    new = f"{p}/{new_name}"
-    children = fs_list_names(spark, cur)
-    rows, fb, fa = _compact_sorted(
-        spark,
-        f"{cur}/bands",
-        f"{new}/bands",
-        [id_col, "band"],
-        target_files,
-        partition_col="bp" if plen else None,
+    return compact_generation(
+        spark, path, name, _compaction_tables(name), target_files, force
     )
-    report: dict = {
-        "bands": {"rows": rows, "files_before": fb, "files_after": fa}
-    }
-    if "ingest_epochs" in children:
-        rows, fb, fa = _compact_sorted(
-            spark,
-            f"{cur}/ingest_epochs",
-            f"{new}/ingest_epochs",
-            ["query_id", "epoch_id"],
-            1,
-        )
-        report["ingest_epochs"] = {
-            "rows": rows,
-            "files_before": fb,
-            "files_after": fa,
-        }
-    for n in children:
-        if n in ("bands", "ingest_epochs", "commit") or n.startswith("."):
-            continue
-        fs_copy(spark, f"{cur}/{n}", f"{new}/{n}")
-    _write_commit(spark, new, params["build_id"])  # completes the gen
-    _assert_no_late_writers(spark, cur, report, name, entry_claim)
-    _write_current(spark, p, new_name)
-    keep = {new_name, cur_name}
-    for n in fs_list_names(spark, p):
-        if _GEN_RE.match(n) and n not in keep:
-            _fs_delete(spark, f"{p}/{n}")
-    if _release_claim_if_proven_stale(spark, p, entry_claim):
-        report["stale_claim_released"] = entry_claim
-    report["generation"] = {"previous": cur_name, "current": new_name}
-    return report
 
 
 def append_to_vec_dedup_index(vecs_delta: DataFrame, path: str) -> None:
@@ -1300,13 +1112,7 @@ def append_to_vec_dedup_index(vecs_delta: DataFrame, path: str) -> None:
         params["dim"],
         "append_to_vec_dedup_index",
     )
-    _append_buckets(buckets, path, params)
-
-
-# The vector spellings of the maintenance entry points, kept so existing
-# callers keep working; each function reads the index kind from meta.
-fsck_vec_dedup_index = fsck_dedup_index
-compact_vec_dedup_index = compact_dedup_index
-compact_vec_dedup_index_serving = compact_dedup_index_serving
-migrate_vec_dedup_index_to_serving = migrate_dedup_index_to_serving
-vec_append_gap_ids = append_gap_ids
+    _write_bands(
+        buckets, f"{path}/bands", params.get("bucket_prefix_len") or 0,
+        "append",
+    )

@@ -10,8 +10,10 @@ pre-swap late-writer tripwires, filesystem-clock GC, and staged
 sorted compaction with row-count verification. That core grew up
 inside ``ann_index`` and was imported by its siblings as private
 helpers (the r10 verdict's "what's missing" #4); this module is its
-neutral home. ``ann_index`` re-exports everything under the original
-private names so its public test seams stay stable.
+neutral home. The ANN and bucket indexes' in-place and generation
+compactions and their commit-marker swap live here once
+(``compact_in_place``, ``compact_generation``, ``swap_in_staged``);
+each index passes only its entry point's name and its loader.
 
 Design notes carried over unchanged:
 
@@ -34,6 +36,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ..fs import (
+    fs_copy,
     fs_delete,
     fs_exists,
     fs_list_names,
@@ -297,7 +300,7 @@ def serving_root_report(spark: SparkSession, path: str) -> dict:
     root, classified against the CURRENT generation's mtime:
 
     - ``superseded_generation``: the newest generation OLDER than
-      current — the DELIBERATE reader grace ``keep_previous`` retains,
+      current — the DELIBERATE reader grace ``compact_generation`` keeps,
       present after every healthy compaction, not a finding;
     - ``generation_debris``: older-than-current generations beyond
       that one — leftovers the next successful compaction sweeps;
@@ -642,3 +645,148 @@ def swap_in_markers(spark: SparkSession, path: str, staged: str) -> None:
     fs_rename(spark, live, old)
     fs_rename(spark, staged, live)
     fs_delete(spark, old)
+
+
+def swap_in_staged(
+    spark: SparkSession,
+    path: str,
+    staging: str,
+    dirs: list,
+    build_id: str | None,
+) -> None:
+    """Replace each of ``dirs`` under ``path`` with its rewrite under
+    ``staging`` inside the commit-marker dark window: the marker is
+    deleted first (any load in the window fails loudly) and re-written
+    with the SAME ``build_id`` last — a repair or compaction is not a
+    new generation — so a crash mid-swap reads as "incomplete index",
+    never as a silently half-swapped one. ``build_id=None`` is a legacy
+    ANN index without a commit marker: the dirs swap unprotected, as
+    that format always has."""
+    if build_id is not None:
+        fs_delete(spark, f"{path}/commit")
+    for d in dirs:
+        fs_delete(spark, f"{path}/{d}")
+        fs_rename(spark, f"{staging}/{d}", f"{path}/{d}")
+    if build_id is not None:
+        write_commit_marker(spark, path, build_id)
+
+
+# ---------------------------------------------------------------------------
+# The two compactions of a bucket or ANN index. Each index kind supplies
+# its public entry point's name (refusals and aborts name it) and a
+# strict loader ``load(spark, root) -> (build_id, layout)``: the
+# generation token (None for a legacy ANN index) and the tables to
+# rewrite, as ``(dir, sort columns, partition column or None)``. The
+# epoch markers are compacted by the core itself.
+# ---------------------------------------------------------------------------
+
+_MARKERS = ("ingest_epochs", ["query_id", "epoch_id"], None)
+
+
+def _compact_dir(
+    spark: SparkSession,
+    src: str,
+    dst: str,
+    table: tuple,
+    target_files: int | None,
+) -> dict:
+    d, sort_cols, part = table
+    rows, fb, fa = compact_sorted(
+        spark, f"{src}/{d}", f"{dst}/{d}", sort_cols, target_files, part
+    )
+    return {"rows": rows, "files_before": fb, "files_after": fa}
+
+
+def compact_in_place(
+    spark: SparkSession,
+    path: str,
+    name: str,
+    load,
+    target_files: int | None = None,
+    force: bool = False,
+) -> dict:
+    """Compact the live tables of the index at ``path`` in place: claim
+    refusal, strict load, marker restore, staged sorted rewrite, the
+    pre-swap late-writer check, the dark-window swap
+    (``swap_in_staged``), and the epoch markers compacted last, outside
+    the dark window (losing markers is benign: replay falls back to
+    classification). Readers are not isolated — a search planned before
+    the swap reads files it removes — so this runs in a maintenance
+    slot; ``compact_generation`` is the zero-downtime variant.
+
+    ``assert_no_late_writers`` is the only late-writer defense here
+    (``assert_generation_stable`` is a no-op on a flat layout, whose
+    root resolves to itself): a forced run past a claim the operator
+    misjudged as stale still aborts when that ingest commits a batch.
+    Returns ``{dir: {"rows", "files_before", "files_after"}}``."""
+    entry_claim = refuse_if_ingest_active(spark, path, name, force)
+    root = resolve_serving_root(spark, path)  # the live generation
+    build_id, layout = load(spark, root)  # strict: marker must match
+    restore_markers_if_crashed(spark, root)
+    staging = f"{root}/.compact_stage"
+    fs_delete(spark, staging)  # stale from a prior crashed compaction
+    report = {t[0]: _compact_dir(spark, root, staging, t, target_files) for t in layout}
+    # the claim lives at the LOGICAL root: on a flat layout parent(root)
+    # would point above the index
+    assert_no_late_writers(
+        spark, root, report, name, entry_claim, marker_root=path
+    )
+    swap_in_staged(spark, root, staging, [t[0] for t in layout], build_id)
+    if try_read_parquet(spark, f"{root}/ingest_epochs") is not None:
+        report["ingest_epochs"] = _compact_dir(spark, root, staging, _MARKERS, 1)
+        swap_in_markers(spark, root, f"{staging}/ingest_epochs")
+    fs_delete(spark, staging)
+    return report
+
+
+def compact_generation(
+    spark: SparkSession,
+    path: str,
+    name: str,
+    load,
+    target_files: int | None = None,
+    force: bool = False,
+) -> dict:
+    """Zero-downtime compaction of a serving-layout index: compact a
+    COPY of the live generation's tables (and epoch markers, to one
+    file) into a new ``gen-<id>/``, byte-copy the small artifacts, write
+    the new generation's commit marker LAST, and swap the ``CURRENT``
+    pointer only after the pre-swap late-writer check. A crash anywhere
+    before the swap leaves the old generation live and the partial one
+    orphaned for the next run's sweep. The superseded generation is
+    kept until the NEXT compaction (in-flight reader grace — the doubled
+    storage is the rent for zero downtime, SCALE.md); older ones are
+    deleted here. A claim bypassed with ``force`` is released at the
+    end, once the file-count check proved it wrote nothing."""
+    p = path.rstrip("/")
+    entry_claim = refuse_if_ingest_active(spark, p, name, force)
+    cur_name = fs_read_text(spark, f"{p}/{CURRENT}")
+    if cur_name is None:
+        raise ValueError(
+            f"{name}: index at {path} is in the flat layout — run its "
+            "migrate_*_to_serving() once, or use the in-place compaction "
+            "in a maintenance window"
+        )
+    cur_name = cur_name.strip()
+    cur = f"{p}/{cur_name}"
+    build_id, layout = load(spark, cur)  # validates marker + geometry
+    new_name = f"gen-{uuid.uuid4().hex[:12]}"
+    new = f"{p}/{new_name}"
+    children = fs_list_names(spark, cur)
+    report = {t[0]: _compact_dir(spark, cur, new, t, target_files) for t in layout}
+    if _MARKERS[0] in children:
+        report[_MARKERS[0]] = _compact_dir(spark, cur, new, _MARKERS, 1)
+    for n in children:
+        if n not in report and n != "commit" and not n.startswith("."):
+            fs_copy(spark, f"{cur}/{n}", f"{new}/{n}")
+    if build_id is not None:
+        write_commit_marker(spark, new, build_id)  # completes the gen
+    assert_no_late_writers(spark, cur, report, name, entry_claim)
+    write_current_pointer(spark, p, new_name)
+    for n in fs_list_names(spark, p):
+        if GEN_RE.match(n) and n not in (new_name, cur_name):
+            fs_delete(spark, f"{p}/{n}")
+    if release_claim_if_proven_stale(spark, p, entry_claim):
+        report["stale_claim_released"] = entry_claim
+    report["generation"] = {"previous": cur_name, "current": new_name}
+    return report

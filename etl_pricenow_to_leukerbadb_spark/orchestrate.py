@@ -269,7 +269,7 @@ def _ingest_delta_with_heal(
                     f"{job}: {n_partial} delta id(s) are PARTIALLY "
                     "appended (a crashed append's torn "
                     f"{scheme.rows_noun} rows, not a replay) — run "
-                    f"{scheme.fsck_name}('{index_path}', repair=True) to "
+                    f"fsck_dedup_index('{index_path}', repair=True) to "
                     "prune them back to never-appended, then retry: the "
                     "retry appends the pruned ids and continues"
                 ) from exc
@@ -747,7 +747,7 @@ def curate_corpus_daily_vec(
                 f"{index_root}/meta — expected exactly one row with a "
                 "'dim' column (a TEXT dedup index's meta has none — "
                 "wrong index_path? — and zero rows means a torn "
-                "write: run fsck_vec_dedup_index)"
+                "write: run fsck_dedup_index)"
             )
         recorded_dim = int(meta_rows[0]["dim"])
         if int(dim) != recorded_dim:

@@ -2157,18 +2157,17 @@ def dd_cluster_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # legitimately carry zero rows under allow_short) lives in
         # dedup_index next to the append that creates it.
         from ..operators.dedup_index import (
+            append_gap_ids,
             query_dedup_candidates,
-            verify_append_complete,
         )
 
-        rep = verify_append_complete(spark, idx, delta, text_col="text")
-        if not rep["complete"]:
+        n_gaps = append_gap_ids(spark, idx, delta, text_col="text").count()
+        if n_gaps:
             raise RuntimeError(
                 f"dd_cluster_merge: slice {slice_idx} is PARTIALLY "
-                f"appended ({rep['n_complete']}/{rep['n_expected']} "
-                "shinglable ids fully banded in the index) — a crashed "
-                f"append, not a replay; run fsck_dedup_index('{idx}', "
-                "repair=True) and retry"
+                f"appended ({n_gaps} shinglable id(s) not fully banded "
+                "in the index) — a crashed append, not a replay; run "
+                f"fsck_dedup_index('{idx}', repair=True) and retry"
             ) from exc
         # complete replay: the loop's tail is the documented recovery —
         # probe + idempotent merge, no re-append (the crashed merge's

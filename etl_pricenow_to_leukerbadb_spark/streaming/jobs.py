@@ -759,9 +759,9 @@ def _stream_bucket_ingest(
     kinds (text and vector frontends of ``operators/dedup_index``).
     ``params`` is the index meta the public job loaded through its
     kind's loader (an index of the other kind has already refused);
-    the micro-batch schema, the per-id row count and the repair
-    entry point named in errors come from its scheme, and each fresh
-    batch goes to the kind's append frontend with ``append_kw``.
+    the micro-batch schema and the per-id row count come from its
+    scheme, and each fresh batch goes to the kind's append frontend
+    with ``append_kw``.
 
     Replay safety under foreachBatch's at-least-once contract — the
     SAME two-tier scheme as the ANN ingest
@@ -898,7 +898,7 @@ def _stream_bucket_ingest(
                     f"{name}: {n_partial} id(s) in this batch have a "
                     f"PARTIAL bucket set in {resolved}/bands — a prior "
                     "append crashed mid-commit. Run "
-                    f"{scheme.fsck_name}(repair=True) to prune them (this "
+                    "fsck_dedup_index(repair=True) to prune them (this "
                     "delta then re-ingests cleanly) before resuming ingest"
                 )
             fresh = batch_df.join(existing, id_col, "left_anti")

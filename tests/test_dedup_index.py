@@ -210,20 +210,20 @@ def test_unshinglable_docs_fail_build_and_append(spark, docs, split, tmp_path):
     assert bands.filter(F.col("doc_id") == skipped).count() == 0
 
 
-def test_verify_append_complete_tracks_shinglable_ids_and_band_rows(
+def test_append_gap_ids_tracks_shinglable_ids_and_band_rows(
     spark, docs, split, tmp_path
 ):
     """The replay-completeness answer lives next to the append guard:
-    a fully-landed delta verifies complete; a delta containing an
+    a fully-landed delta has no gaps; a delta containing an
     unshinglable doc (allow_short — zero band rows by construction)
-    still verifies complete, because expected ids are the SHINGLABLE
-    ones; an id missing one of its band rows (a crashed append's
-    partial state) fails, because completeness is per-id band-ROW
-    counts, not id presence."""
+    still has none, because expected ids are the SHINGLABLE ones; an
+    id missing one of its band rows (a crashed append's partial state)
+    is a gap, because completeness is per-id band-ROW counts, not id
+    presence."""
     import shutil
 
     from etl_pricenow_to_leukerbadb_spark.operators.dedup_index import (
-        verify_append_complete,
+        append_gap_ids,
     )
 
     old, delta = split
@@ -238,15 +238,18 @@ def test_verify_append_complete_tracks_shinglable_ids_and_band_rows(
         ).alias("text"),
     )
     append_to_dedup_index(delta2, path, allow_short=True)
-    rep = verify_append_complete(spark, path, delta2)
-    assert rep["complete"]
-    assert rep["n_expected"] == rep["n_complete"] == delta.count() - 1
-    assert rep["n_delta"] == delta.count()
-    # an un-appended delta is NOT complete (0 banded ids)
+    assert append_gap_ids(spark, path, delta2).count() == 0
+    # an un-appended delta: every shinglable id is a gap with 0 rows
     fresh = delta2.select(
         (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
     )
-    assert not verify_append_complete(spark, path, fresh)["complete"]
+    got = {tuple(r) for r in append_gap_ids(spark, path, fresh).collect()}
+    want = {
+        (r["doc_id"] + 10_000_000, 0)
+        for r in delta.select("doc_id").collect()
+        if r["doc_id"] != short_id
+    }
+    assert got == want
     # strip one band row of one appended delta id: partial
     victim = delta2.filter(F.col("doc_id") != short_id).agg(
         F.min("doc_id")
@@ -257,9 +260,8 @@ def test_verify_append_complete_tracks_shinglable_ids_and_band_rows(
     ).localCheckpoint()
     shutil.rmtree(f"{path}/bands")
     pruned.write.parquet(f"{path}/bands")
-    rep = verify_append_complete(spark, path, delta2)
-    assert not rep["complete"]
-    assert rep["n_complete"] == rep["n_expected"] - 1
+    got = [tuple(r) for r in append_gap_ids(spark, path, delta2).collect()]
+    assert got == [(victim, GEOM["bands"] - 1)]
 
 
 def test_stream_dedup_ingest_e2e_and_replay(spark, docs, split, tmp_path):
@@ -325,6 +327,10 @@ def test_compact_dedup_index_preserves_probe(spark, docs, split, tmp_path):
         compact_dedup_index,
         fsck_dedup_index,
     )
+    from etl_pricenow_to_leukerbadb_spark.operators.serving import (
+        claim_index_for_ingest,
+        release_index_ingest_claim,
+    )
     from etl_pricenow_to_leukerbadb_spark.session import tiny_local_df
 
     old, delta = split
@@ -344,6 +350,13 @@ def test_compact_dedup_index_preserves_probe(spark, docs, split, tmp_path):
     before = sorted(
         tuple(r) for r in query_dedup_candidates(spark, path, probe).collect()
     )
+    # a live ingest claim refuses, naming the entry point that refused
+    token = claim_index_for_ingest(spark, path, "live-ingest")
+    with pytest.raises(
+        RuntimeError, match="compact_dedup_index: .*claimed by a live ingest"
+    ):
+        compact_dedup_index(spark, path, target_files=2)
+    release_index_ingest_claim(spark, path, owner_token=token)
     report = compact_dedup_index(spark, path, target_files=2)
     assert report["bands"]["files_after"] < report["bands"]["files_before"]
     assert report["ingest_epochs"]["rows"] == 2
@@ -464,7 +477,6 @@ def test_vec_append_fsck_repair_roundtrip(spark, vecs, vec_split, tmp_path):
         append_to_vec_dedup_index,
         build_vec_dedup_index,
         fsck_dedup_index,
-        fsck_vec_dedup_index,
     )
     from etl_pricenow_to_leukerbadb_spark.session import tiny_local_df
 
@@ -472,9 +484,9 @@ def test_vec_append_fsck_repair_roundtrip(spark, vecs, vec_split, tmp_path):
     path = str(tmp_path / "vddx_fsck")
     build_vec_dedup_index(old, path, **VEC_GEOM)
     append_to_vec_dedup_index(delta, path)
-    report = fsck_vec_dedup_index(spark, path)
+    report = fsck_dedup_index(spark, path)
     assert report["n_ids"] == vecs.count() and report["dup_rows"] == 0
-    # the unsuffixed name reads the vector kind from meta
+    # the sweep is read-only: a second one reports the same
     assert fsck_dedup_index(spark, path) == report
     # appended index == clean rebuild over the union
     full = str(tmp_path / "vddx_full")
@@ -490,8 +502,8 @@ def test_vec_append_fsck_repair_roundtrip(spark, vecs, vec_split, tmp_path):
         F.col("vec_id") == 7
     ).write.mode("append").parquet(f"{path}/bands")
     with pytest.raises(RuntimeError, match="repair=True"):
-        fsck_vec_dedup_index(spark, path)
-    rep = fsck_vec_dedup_index(spark, path, repair=True)
+        fsck_dedup_index(spark, path)
+    rep = fsck_dedup_index(spark, path, repair=True)
     assert rep["repair"]["pruned_ids"] == 1
     again = sorted(tuple(r) for r in spark.read.parquet(f"{path}/bands").collect())
     assert again == want
@@ -580,8 +592,7 @@ def test_vec_compact_preserves_probe(spark, vecs, vec_split, tmp_path):
     from etl_pricenow_to_leukerbadb_spark.operators.dedup_index import (
         build_vec_dedup_index,
         compact_dedup_index,
-        compact_vec_dedup_index,
-        fsck_vec_dedup_index,
+        fsck_dedup_index,
         load_vec_dedup_index,
         query_vec_dedup_candidates,
     )
@@ -593,7 +604,7 @@ def test_vec_compact_preserves_probe(spark, vecs, vec_split, tmp_path):
         tuple(r)
         for r in query_vec_dedup_candidates(spark, path, delta).collect()
     )
-    report = compact_vec_dedup_index(spark, path, target_files=1)
+    report = compact_dedup_index(spark, path, target_files=1)
     assert report["bands"]["files_after"] <= report["bands"]["files_before"]
     after = sorted(
         tuple(r)
@@ -602,11 +613,10 @@ def test_vec_compact_preserves_probe(spark, vecs, vec_split, tmp_path):
     assert after == before and before
     _, params = load_vec_dedup_index(spark, path)
     assert params["build_id"] == build_id
-    fsck_vec_dedup_index(spark, path)
-    # the unsuffixed name reads the vector kind from meta: on the same
-    # (compacted) index it reports what the _vec name reports
+    fsck_dedup_index(spark, path)
+    # re-compacting the compacted index is a fixed point
     assert compact_dedup_index(spark, path, target_files=1) == (
-        compact_vec_dedup_index(spark, path, target_files=1)
+        compact_dedup_index(spark, path, target_files=1)
     )
 
 

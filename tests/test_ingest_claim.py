@@ -146,12 +146,13 @@ def test_flat_compaction_force_aborts_on_live_writer(
     committed between the snapshot and the swap is injected by
     wrapping the snapshot-taking rewrite itself."""
     from etl_pricenow_to_leukerbadb_spark.operators import ann_index as ai
+    from etl_pricenow_to_leukerbadb_spark.operators import serving as sv
 
     path = str(tmp_path / "idx")
     build_pq_index(corpus.filter(F.col("vec_id") < 400), path, **PARAMS)
     claim_index_for_ingest(spark, path, "actually-alive-job")
 
-    real = ai._compact_sorted
+    real = sv.compact_sorted
     state = {"injected": False}
 
     def inject_then_compact(spark_, src, staging, *a, **kw):
@@ -164,7 +165,7 @@ def test_flat_compaction_force_aborts_on_live_writer(
             )
         return out
 
-    monkeypatch.setattr(ai, "_compact_sorted", inject_then_compact)
+    monkeypatch.setattr(sv, "compact_sorted", inject_then_compact)
     try:
         with pytest.raises(RuntimeError, match="gained files since"):
             compact_index(spark, path, force=True)
@@ -175,7 +176,7 @@ def test_flat_compaction_force_aborts_on_live_writer(
     assert codes.select("vec_id").distinct().count() == corpus.count()
     # without the live writer, the same forced compaction succeeds
     claim_index_for_ingest(spark, path, "corpse-claim")
-    monkeypatch.setattr(ai, "_compact_sorted", real)
+    monkeypatch.setattr(sv, "compact_sorted", real)
     report = compact_index(spark, path, force=True)
     assert report["codes"]["rows"] > 0
 

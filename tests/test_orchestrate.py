@@ -1094,7 +1094,7 @@ def test_curate_corpus_daily_vec_serving_layout_gate_and_append(
     import pytest
 
     from etl_pricenow_to_leukerbadb_spark.operators.dedup_index import (
-        migrate_vec_dedup_index_to_serving,
+        migrate_dedup_index_to_serving,
     )
     from etl_pricenow_to_leukerbadb_spark.operators.serving import (
         resolve_serving_root,
@@ -1113,7 +1113,7 @@ def test_curate_corpus_daily_vec_serving_layout_gate_and_append(
     )
     assert a1["index"] == {"built": True, "appended": True}
 
-    migrate_vec_dedup_index_to_serving(spark, idx)
+    migrate_dedup_index_to_serving(spark, idx)
     live = resolve_serving_root(spark, idx)
     assert live != idx.rstrip("/")
     bands_before = spark.read.parquet(f"{live}/bands").count()
@@ -1251,7 +1251,6 @@ def test_curation_jobs_refuse_torn_serving_generation(
     from etl_pricenow_to_leukerbadb_spark.fs import fs_delete, fs_exists
     from etl_pricenow_to_leukerbadb_spark.operators.dedup_index import (
         migrate_dedup_index_to_serving,
-        migrate_vec_dedup_index_to_serving,
     )
     from etl_pricenow_to_leukerbadb_spark.operators.serving import (
         resolve_serving_root,
@@ -1271,7 +1270,7 @@ def test_curation_jobs_refuse_torn_serving_generation(
         "vec_id bigint, embedding array<float>",
     )
     curate_corpus_daily_vec(day1, vidx, vcl, vsnap, dim=8, n_planes=4, n_tables=4)
-    migrate_vec_dedup_index_to_serving(spark, vidx)
+    migrate_dedup_index_to_serving(spark, vidx)
     fs_delete(spark, f"{resolve_serving_root(spark, vidx)}/meta")
     day2 = spark.createDataFrame(
         [(i, [float(i + j) for j in range(8)]) for i in range(6, 12)],

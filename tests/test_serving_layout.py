@@ -123,12 +123,12 @@ def test_crash_before_pointer_swap_leaves_old_generation_live(
     before = _rows(search_pq_index(spark, path, queries, corpus, k=5))
     old_cur = fs_read_text(spark, f"{path}/CURRENT").strip()
 
-    import etl_pricenow_to_leukerbadb_spark.operators.ann_index as ai
+    import etl_pricenow_to_leukerbadb_spark.operators.serving as sv
 
     def boom(spark_, p, gen):
         raise RuntimeError("injected crash before pointer swap")
 
-    monkeypatch.setattr(ai, "_write_current", boom)
+    monkeypatch.setattr(sv, "write_current_pointer", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
         compact_index_serving(spark, path)
     monkeypatch.undo()

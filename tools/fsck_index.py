@@ -222,10 +222,7 @@ def main() -> int:
     from etl_pricenow_to_leukerbadb_spark.operators.dedup_index import (
         compact_dedup_index,
         compact_dedup_index_serving,
-        compact_vec_dedup_index,
-        compact_vec_dedup_index_serving,
         fsck_dedup_index,
-        fsck_vec_dedup_index,
     )
     from etl_pricenow_to_leukerbadb_spark.operators.cluster_index import (
         compact_cluster_assignments,
@@ -235,17 +232,13 @@ def main() -> int:
     )
     from etl_pricenow_to_leukerbadb_spark.session import get_spark
 
-    if args.dedup:
+    if args.dedup or args.vec_dedup:
+        # one set of maintenance functions serves both kinds (each reads
+        # the kind from the index meta); --vec-dedup still selects the
+        # vector curation sweep below
         fsck = fsck_dedup_index
         compact = (
             compact_dedup_index_serving if args.serving else compact_dedup_index
-        )
-    elif args.vec_dedup:
-        fsck = fsck_vec_dedup_index
-        compact = (
-            compact_vec_dedup_index_serving
-            if args.serving
-            else compact_vec_dedup_index
         )
     elif args.clusters or args.snapshot:
         fsck = None  # clusterings/snapshots take dedicated branches below

@@ -2,7 +2,7 @@
 loop? This round every curation-job meta read learned to resolve a
 serving-layout root (``require_untorn_serving_root``) so the dim gate
 and the fresh/append decision survive a
-``migrate_vec_dedup_index_to_serving`` — the probe measures the
+``migrate_dedup_index_to_serving`` — the probe measures the
 per-epoch cost of ``curate_corpus_daily_vec`` against the SAME
 standing state before and after the migration.
 
@@ -50,7 +50,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from etl_pricenow_to_leukerbadb_spark.operators.dedup_index import (  # noqa: E402
-    migrate_vec_dedup_index_to_serving,
+    migrate_dedup_index_to_serving,
 )
 from etl_pricenow_to_leukerbadb_spark.orchestrate import (  # noqa: E402
     curate_corpus_daily_vec,
@@ -143,7 +143,7 @@ def main() -> None:
 
         for e in range(EPOCHS):
             epoch(e, "flat")
-        migrate_vec_dedup_index_to_serving(spark, idx)
+        migrate_dedup_index_to_serving(spark, idx)
         for e in range(EPOCHS, 2 * EPOCHS):
             epoch(e, "serving")
     finally:
